@@ -33,11 +33,16 @@ import fnmatch
 import json
 import os
 import re
+import shutil
+import sys
+import uuid
 from typing import Any, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from chillastic_spark.locks import FileLock, held_exclusive, test_pause
 
 ENVELOPE_SCHEMA = T.StructType(
     [
@@ -52,8 +57,30 @@ ENVELOPE_SCHEMA = T.StructType(
 # settings stripped before create (transfer.js:234-243)
 NON_PORTABLE_SETTINGS = ("uuid", "creation_date", "provided_name")
 
+
+def _default_buckets() -> int:
+    """``CHILLASTIC_STORE_BUCKETS``, read once at import. A malformed
+    or out-of-range value must not break the import of every engine
+    entry point, nor pass silently until the first migration: warn on
+    stderr and fall back to 32. The range is the one ``bucket-NNNN``
+    dirs (and the stream glob's four digits) can name."""
+    raw = os.environ.get("CHILLASTIC_STORE_BUCKETS", "32")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if 0 < n <= 9999:
+        return n
+    print(
+        f"chillastic: CHILLASTIC_STORE_BUCKETS={raw!r} is not an integer "
+        "in [1, 9999]; using 32",
+        file=sys.stderr,
+    )
+    return 32
+
+
 # hash-bucketed index layout (see module docstring)
-N_BUCKETS_DEFAULT = int(os.environ.get("CHILLASTIC_STORE_BUCKETS", "32"))
+N_BUCKETS_DEFAULT = _default_buckets()
 BUCKET_PREFIX = "bucket-"
 BUCKET_MARKER = ".n_buckets"
 
@@ -76,8 +103,6 @@ def store_swap_window(index_path: str):
     covers both layouts. Re-entrant per thread via
     ``locks.held_exclusive`` (recovery runs inside callers that
     already hold the window)."""
-    from chillastic_spark.locks import FileLock, held_exclusive
-
     lock_path = index_path + ".swap.lock"
     if held_exclusive(lock_path):
         yield
@@ -88,6 +113,78 @@ def store_swap_window(index_path: str):
         yield
     finally:
         lk.release()
+
+
+def swap_dir(index_path: str, target: str, staged: Optional[str]) -> None:
+    """Install ``staged`` as ``target`` — the store's ONE live-dir
+    rename window, for a whole index (``target == index_path``) or one
+    of its buckets. ``rename(target→.old-)``, ``rename(staged→target)``,
+    ``rmtree(.old-)``, all under :func:`store_swap_window`. Either dir
+    may be absent: an absent ``target`` is a first write, an absent (or
+    None) ``staged`` deletes ``target`` (a bucket with no surviving
+    rows — absent == empty). A crash between the renames leaves the
+    only copy in ``.old-``; :func:`_heal_swaps` restores it."""
+    old = target + ".old-" + uuid.uuid4().hex[:8]
+    with store_swap_window(index_path):
+        if os.path.exists(target):
+            os.rename(target, old)
+        # torture-test crash window: live dir renamed away, staged dir
+        # not yet installed (tests/test_store_reader_race.py)
+        test_pause("store_mid_swap", os.path.dirname(index_path))
+        if staged is not None and os.path.isdir(staged):
+            os.rename(staged, target)
+        if os.path.exists(old):
+            shutil.rmtree(old)
+
+
+def _recover_interrupted_swap(path: str) -> None:
+    """Heal :func:`swap_dir`'s crash window for one dir (an index or a
+    bucket). ``.old-`` siblings exist only because a swap — upsert,
+    its first migration, purge, or compaction — died inside the
+    window, and the live dir tells us WHERE it died:
+
+    * live path missing → between ``rename(target, old)`` and
+      ``rename(staged, target)``: the NEWEST ``.old-`` (by mtime — the
+      suffixes are random hex, not ordered) holds the current data;
+      restore it. Any older leftovers are from earlier crashes and are
+      superseded — remove them so a later crash can never resurrect a
+      stale snapshot.
+    * live path present → after ``rename(staged, target)`` but before
+      ``rmtree(old)``: every ``.old-`` is a superseded snapshot;
+      remove them all.
+
+    The interrupted rewrite's staged dir is left for inspection (the
+    scratch filters hide it); rerunning the mutation redoes it."""
+    base = os.path.basename(path)
+    parent = os.path.dirname(path) or "."
+    if not os.path.isdir(parent):
+        return
+    olds = [
+        os.path.join(parent, d)
+        for d in os.listdir(parent)
+        if d.startswith(base + ".old-")
+    ]
+    if not olds:
+        return
+    olds.sort(key=lambda p: os.path.getmtime(p))
+    if not os.path.exists(path):
+        os.rename(olds.pop(), path)
+    for stale in olds:
+        shutil.rmtree(stale)
+
+
+def _heal_swaps(index_path: str) -> None:
+    """Heal BOTH swap levels of one index: the index dir itself, then
+    every bucket — keyed off the ``.old-`` LEFTOVERS, because
+    ``bucket_paths`` only lists existing dirs and a bucket whose live
+    dir vanished mid-swap would otherwise stay invisible forever."""
+    _recover_interrupted_swap(index_path)
+    if os.path.isdir(index_path):
+        for d in os.listdir(index_path):
+            if ".old-" in d:
+                _recover_interrupted_swap(
+                    os.path.join(index_path, d.split(".old-", 1)[0])
+                )
 
 
 def bucket_expr(n_buckets: int) -> F.Column:
@@ -162,8 +259,8 @@ def open_store(path_or_url: str, create: bool = True):
 
         return ESStore(path_or_url)
     if isinstance(path_or_url, str) and path_or_url.startswith("delta:"):
-        # jar-gated Delta MERGE sink (sinks/delta.py): "delta:<table>"
-        from chillastic_spark.sinks.delta import DeltaStore
+        # jar-gated Delta MERGE store (sources/delta.py): "delta:<table>"
+        from chillastic_spark.sources.delta import DeltaStore
 
         return DeltaStore(path_or_url[len("delta:"):])
     return DocumentStore(path_or_url, create=create)
@@ -214,8 +311,6 @@ class DocumentStore:
         write: two concurrent put_indices used to last-writer-win and
         silently drop each other's entries (the data layer serializes
         via per-index locks; the catalog needs the same)."""
-        from chillastic_spark.locks import FileLock
-
         return FileLock(self._catalog_path(which) + ".lock")
 
     def put_indices(self, indices: list[dict]) -> None:
@@ -409,8 +504,8 @@ class DocumentStore:
         between a live swap's two renames and silently serve an empty
         or bucket-incomplete frame. A dir missing UNDER the lock with
         ``.old-``/``.compact-`` siblings is a crashed swap — healed
-        once (``_recover_interrupted_swap``) and retried, so a reader
-        is never the caller that has to know about compactor crashes.
+        once (by entering :meth:`mutation`) and retried, so a reader is
+        never the caller that has to know about writer crashes.
         """
         path = self.index_path(index)
         if not os.path.isdir(os.path.dirname(path)):
@@ -441,7 +536,8 @@ class DocumentStore:
             # absent under the lock: genuinely unbuilt, or a crashed
             # swap whose leftovers hold the data — heal once, retry
             if attempt == 0 and self._swap_leftovers(index):
-                self._heal_interrupted_swap(index)
+                with self.mutation(index):  # entering the guard heals
+                    pass
                 continue
             return spark.createDataFrame([], ENVELOPE_SCHEMA)
         if df is None:
@@ -466,8 +562,6 @@ class DocumentStore:
         already holds it exclusively (a recovery mid-swap reading its
         own work would self-deadlock: flock treats two fds of one
         process as independent holders)."""
-        from chillastic_spark.locks import FileLock, held_exclusive
-
         lock_path = self.index_path(index) + ".swap.lock"
         if held_exclusive(lock_path):
             yield
@@ -481,7 +575,7 @@ class DocumentStore:
 
     def _swap_leftovers(self, index: str) -> bool:
         """True when ``.old-``/``.compact-`` siblings of the index dir
-        exist — the signature of a compaction that died mid-swap."""
+        exist — the signature of a swap that died mid-window."""
         base = os.path.basename(self.index_path(index))
         parent = os.path.dirname(self.index_path(index))
         if not os.path.isdir(parent):
@@ -491,18 +585,28 @@ class DocumentStore:
             for d in os.listdir(parent)
         )
 
-    def _heal_interrupted_swap(self, index: str) -> None:
-        """Roll a crashed flat-index swap back to its ``.old-``
-        snapshot (``maintenance._recover_interrupted_swap``) under the
-        full writer locks — the read path's self-service recovery."""
-        from chillastic_spark.locks import FileLock
-        from chillastic_spark.sources.maintenance import (
-            _recover_interrupted_swap,
-        )
-
+    @contextlib.contextmanager
+    def mutation(self, index: str):
+        """The ONE guard every change to an index runs under (upsert,
+        purge, ``write_documents``, compaction — and a read that finds
+        a crashed swap). The parquet store has no transaction log, so
+        one writer per index is enforced here: the EXCLUSIVE flock on
+        ``<index>.lock`` serializes whole mutations — across processes
+        and, since every acquisition opens its own fd, across threads of
+        one process alike (locks.py). Once held, both swap levels are
+        healed under :func:`store_swap_window` BEFORE the caller reads
+        anything: a bucket whose live dir died mid-swap reads as empty,
+        and merging against "empty" would drop its pre-crash rows for
+        good. Re-entrant per thread. Delta/Iceberg MERGE replaces all of
+        this with real transactions at scale."""
         path = self.index_path(index)
-        with FileLock(path + ".lock"), store_swap_window(path):
-            _recover_interrupted_swap(path)
+        if held_exclusive(path + ".lock"):
+            yield
+            return
+        with FileLock(path + ".lock"):
+            with store_swap_window(path):
+                _heal_swaps(path)
+            yield
 
     def read_sizes(
         self, spark: SparkSession, index: str, type: Optional[str] = None
@@ -533,8 +637,8 @@ class DocumentStore:
         overwriting one drops the bucket marker and returns the index
         to the flat layout the caller asked for.
 
-        EVERY path (flat included) takes the same per-index locks as
-        upsert/purge/compaction and heals interrupted swaps first: an
+        EVERY path (flat included) runs under :meth:`mutation`, like
+        upsert/purge/compaction, so interrupted swaps heal first: an
         unlocked flat write raced the merge's flat->bucketed migration
         (rows landing in a dir about to be renamed away and rmtree'd),
         and an un-healed bucketed append re-created a live bucket dir
@@ -545,23 +649,20 @@ class DocumentStore:
             "_index", "_type", "_id", "_source",
             *( ["_size"] if "_size" in df.columns else [F.lit(None).cast("long").alias("_size")]),
         ]
-        from chillastic_spark.locks import FileLock
-        from chillastic_spark.sinks import _index_lock
-        from chillastic_spark.sources.maintenance import (
-            _recover_interrupted_swap,
-            recover_bucket_swaps,
-        )
-
-        with _index_lock(self.index_path(index)), FileLock(
-            self.index_path(index) + ".lock"
-        ):
-            _recover_interrupted_swap(self.index_path(index))
-            recover_bucket_swaps(self.index_path(index))
+        with self.mutation(index):
             # the layout can flip flat->bucketed while waiting on the
             # lock (upsert migration) — read the marker INSIDE it
             nb = self.bucket_count(index)
             if nb is not None and mode == "append":
-                self._append_bucketed(df.select(*cols), index, nb)
+                # route rows into their buckets: move the (uniquely
+                # named) staged part files in — no live file is rewritten
+                with self.staged_buckets(df.select(*cols), index, nb) as staged:
+                    for b, d in staged.items():
+                        dest = self.bucket_path(index, b)
+                        os.makedirs(dest, exist_ok=True)
+                        for f in os.listdir(d):
+                            if f.endswith(".parquet"):
+                                os.rename(os.path.join(d, f), os.path.join(dest, f))
                 return
             # overwrite of a bucketed index: Spark deletes the whole
             # dir — INCLUDING the bucket marker — before writing, so
@@ -574,27 +675,24 @@ class DocumentStore:
                 writer = writer.partitionBy(*partition_by)
             writer.parquet(self.index_path(index))
 
-    def _append_bucketed(self, df: DataFrame, index: str, n_buckets: int) -> None:
-        """Append rows into their hash buckets: one partitioned write
-        to a temp dir, then move the (uniquely-named) part files into
-        the live bucket dirs — no existing file is rewritten."""
-        import shutil
-        import uuid as _uuid
-
-        tmp = self.index_path(index) + ".append-" + _uuid.uuid4().hex[:8]
-        df.withColumn("__bucket", bucket_expr(n_buckets)).write.partitionBy(
-            "__bucket"
-        ).parquet(tmp)
+    @contextlib.contextmanager
+    def staged_buckets(self, df: DataFrame, index: str, n_buckets: int):
+        """Write ``df`` beside the live index, hash-partitioned by
+        :func:`bucket_expr`, and yield ``{bucket: staged_dir}`` for the
+        non-empty buckets — the ONE staged write every bucketed
+        mutation (merge, migration, append) makes before it touches a
+        live dir, so a crash mid-write leaves the index as it was. The
+        staging dir is removed on exit; move out what you keep."""
+        tmp = self.index_path(index) + ".merge-" + uuid.uuid4().hex[:8]
         try:
-            for d in os.listdir(tmp):
-                if not d.startswith("__bucket="):
-                    continue
-                b = int(d.split("=", 1)[1])
-                dest = self.bucket_path(index, b)
-                os.makedirs(dest, exist_ok=True)
-                for f in os.listdir(os.path.join(tmp, d)):
-                    if f.endswith(".parquet"):
-                        os.rename(os.path.join(tmp, d, f), os.path.join(dest, f))
+            df.withColumn("__bucket", bucket_expr(n_buckets)).write.partitionBy(
+                "__bucket"
+            ).parquet(tmp)
+            yield {
+                int(d.split("=", 1)[1]): os.path.join(tmp, d)
+                for d in os.listdir(tmp)
+                if d.startswith("__bucket=")
+            }
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 

@@ -222,22 +222,3 @@ def test_null_index_is_a_clear_error(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="NULL _index"):
         upsert(spark, store, bad, n_buckets=N_BUCKETS)
-
-
-def test_upsert_heals_interrupted_bucket_swap(spark, tmp_path):
-    """A crash between _swap_bucket's two renames leaves the live
-    bucket only in a .old- dir that readers deliberately ignore — the
-    next delivery must restore it BEFORE merging, or the bucket's
-    pre-crash rows are permanently dropped."""
-    import os
-
-    from chillastic_spark.sources import DocumentStore
-
-    store = DocumentStore(str(tmp_path / "store"))
-    upsert(spark, store, _corpus(spark, 100), n_buckets=N_BUCKETS)
-    victim = store.bucket_paths("ix")[0]
-    os.rename(victim, victim + ".old-crashed1")
-    assert store.read(spark, "ix").count() < 100  # the crash window
-    # next delivery heals first, then merges — nothing lost
-    upsert(spark, store, _batch(spark, [("docNEW", 1)]), n_buckets=N_BUCKETS)
-    assert store.read(spark, "ix").count() == 101

@@ -175,7 +175,7 @@ def test_orphan_state_file_not_inherited_by_fresh_admission(
 def test_destination_only_store_rejected_as_source(
     spark, tmp_path, store_factory, monkeypatch
 ):
-    from chillastic_spark.sinks.delta import DeltaStore
+    from chillastic_spark.sources.delta import DeltaStore
 
     monkeypatch.setattr(DeltaStore, "reachable", lambda self: True)
     dst = store_factory("dst")

@@ -13,7 +13,7 @@ import os
 
 import pytest
 
-from chillastic_spark.sinks import delta as D
+from chillastic_spark.sources import delta as D
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "goldens")
 

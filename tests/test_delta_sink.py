@@ -3,7 +3,7 @@ jar is absent in this container, exactly like es-hadoop — execution is
 gated behind a classpath probe with a clear remediation error)."""
 import pytest
 
-from chillastic_spark.sinks import delta as DL
+from chillastic_spark.sources import delta as DL
 from chillastic_spark.sources import open_store
 
 

@@ -207,7 +207,7 @@ def test_swap_recovery_restores_newest_and_removes_stale(spark, tmp_path):
     import os
     import time
 
-    from chillastic_spark.sources.maintenance import _recover_interrupted_swap
+    from chillastic_spark.sources import _recover_interrupted_swap
 
     root = tmp_path / "r"
     root.mkdir()

@@ -192,39 +192,6 @@ def test_overwrite_failure_cannot_orphan_bucket_dirs(spark, tmp_path):
     assert store.read(spark, "ix").count() == 3
 
 
-def test_sink_heals_index_level_swap_crash(spark, tmp_path):
-    """Review finding: upsert only healed BUCKET-level swaps; a crash
-    between the index-level two renames (migration/_atomic_replace)
-    left NO live dir and the only copy stranded in .old- — the next
-    upsert read 'empty' and installed the batch as a fresh index,
-    permanently losing every pre-crash document."""
-    import os
-    import shutil
-
-    from chillastic_spark.sinks import upsert
-    from chillastic_spark.sources import DocumentStore
-
-    store = DocumentStore(str(tmp_path / "s"))
-    schema = "_index string, _type string, _id string, _source string, _size long"
-    first = spark.createDataFrame(
-        [("ix", "t", f"d{i}", "{}", 10) for i in range(10)], schema
-    )
-    upsert(spark, store, first)
-
-    # simulate the lethal window: live dir renamed away, crash before
-    # the new dir landed
-    path = store.index_path("ix")
-    os.rename(path, path + ".old-deadc0de")
-    assert not os.path.exists(path)
-
-    second = spark.createDataFrame([("ix", "t", "d99", "{}", 10)], schema)
-    upsert(spark, store, second)
-    ids = {r["_id"] for r in store.read(spark, "ix").collect()}
-    assert ids == {f"d{i}" for i in range(10)} | {"d99"}  # nothing lost
-    assert not os.path.exists(path + ".old-deadc0de")
-    shutil.rmtree(str(tmp_path / "s"))
-
-
 def test_purge_preserves_type_partitioned_layout(spark, tmp_path):
     """Review finding: purge on a flat _type-partitioned index rewrote
     it WITHOUT partitionBy, silently destroying the pruned layout."""
