@@ -10,16 +10,20 @@ a status API.
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import json
 import os
 import threading
 import traceback
 from typing import Callable, Optional
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from chillastic_spark.locks import FileLock, LockHeld
-from chillastic_spark.model import ActionRef, Progress, Subtask, Task, validate_object_id
+from chillastic_spark.model import (
+    ActionRef, Progress, SliceGroup, Subtask, Task, validate_object_id,
+)
 from chillastic_spark.operators.mutate import apply_data_mutators, mutate_objects
 from chillastic_spark.plans import Bound, DataFrameSizeStats, plan_bounds
 from chillastic_spark.registry import Filters, Mutators
@@ -205,24 +209,43 @@ class TaskState:
             self.save()
         return True
 
-    def pop(self, with_progress: bool = False) -> Optional[Subtask]:
-        """FIFO pop. ``with_progress=True`` writes the initial progress
-        entry IN THE SAME atomic round: popped-but-untracked is a
-        window where the subtask exists in NO persisted structure
-        (backlog, progress, completed), so a concurrent build_backlog's
-        in-flight guard passes and re-enqueues it — the slice then
-        transfers twice. One round closes the window."""
+    def pop(
+        self, with_progress: bool = False, max_members: Optional[int] = 1
+    ) -> Optional[SliceGroup]:
+        """FIFO pop of one slice group: the head subtask plus the
+        backlog entries right behind it of the same (documents, index,
+        type) — at most ``max_members`` in all (None: no cap). Index
+        and template subtasks always pop alone. ``with_progress=True``
+        writes every member's initial progress entry IN THE SAME atomic
+        round: popped-but-untracked is a window where a subtask exists
+        in NO persisted structure (backlog, progress, completed), so a
+        concurrent build_backlog's in-flight guard passes and
+        re-enqueues it — the slice then transfers twice. One round
+        closes the window."""
 
         def _pop():
-            if not self.data["backlog"]:
+            backlog = self.data["backlog"]
+            if not backlog:
                 return None
-            sid, count = self.data["backlog"].pop(0)
+            members = [Subtask.from_id(*backlog[0])]
+            key = members[0].slice_key()
+            while (
+                key is not None
+                and len(members) < len(backlog)
+                and (max_members is None or len(members) < max_members)
+            ):
+                nxt = Subtask.from_id(*backlog[len(members)])
+                if nxt.slice_key() != key:
+                    break
+                members.append(nxt)
+            del backlog[: len(members)]
             if with_progress:
-                self.data["progress"][sid] = vars(
-                    Progress(tick=0, transferred=0, total=count).validate()
-                )
+                for m in members:
+                    self.data["progress"][m.subtask_id()] = vars(
+                        Progress(tick=0, transferred=0, total=m.count).validate()
+                    )
             self.save()
-            return Subtask.from_id(sid, count)
+            return SliceGroup(tuple(members))
 
         return self._atomic(_pop)
 
@@ -306,6 +329,9 @@ class Transfer:
     scan → mutate → upsert for documents; catalog read → driver-side
     mutate → catalog write for index configs and templates."""
 
+    # the tag upsert uses to tell a slice group's members apart
+    ORDINAL = "__member"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -318,35 +344,63 @@ class Transfer:
         self.dest = dest
         self.mutators_by_type = mutators_by_type or {}
         self.update_callback: Optional[Callable[[int, int], None]] = None
+        # ES and Delta destinations deliver via _bulk doc_as_upsert /
+        # Delta MERGE, one call per subtask at its planned flushSize;
+        # parquet stores take the bucket-scoped MERGE, where flushSize
+        # means nothing and one call can carry a whole slice group
+        self.merges = not hasattr(dest, "deliver")
 
     def mutate(self, objs: list, type_: str) -> list:
         return mutate_objects(objs, self.mutators_by_type.get(type_))
 
-    def transfer_data(self, subtask: Subtask) -> int:
-        """Scan one (index,type,[size-range)) slice, apply the data
-        mutator chain, MERGE into dest (transfer.js:103-151 reshaped:
-        the scroll loop IS the partitioned scan; flush buffering IS the
-        write; retries are Spark task retries)."""
-        flush = subtask.flush_size if (subtask.flush_size or 0) > 0 else 100
+    def _scan(self, subtask: Subtask) -> DataFrame:
+        """One (index,type,[size-range)) slice with the data mutator
+        chain applied (transfer.js:103-151 reshaped: the scroll loop IS
+        the partitioned scan; retries are Spark task retries)."""
         read_kw = {}
         if hasattr(self.source, "deliver"):  # ES source pages at flushSize
-            read_kw["flush_size"] = flush
+            read_kw["flush_size"] = _flush_size(subtask)
         df = self.source.read(
             self.spark, subtask.index, subtask.type, subtask.min_size,
             subtask.max_size, **read_kw,
         )
-        df = apply_data_mutators(df, self.mutators_by_type.get("data"))
-        # sink dispatch: ES destinations deliver via _bulk doc_as_upsert,
-        # parquet stores via the bucket-scoped MERGE — same semantics.
-        # The planned per-subtask flushSize drives scroll page size and
-        # bulk batch size, exactly the reference contract
-        # (transfer.js:145, :159-167).
-        if hasattr(self.dest, "deliver"):
-            delivered = self.dest.deliver(self.spark, df, flush_size=flush)
+        return apply_data_mutators(df, self.mutators_by_type.get("data"))
+
+    def transfer_data(self, work: "Subtask | SliceGroup") -> list[int]:
+        """Scan, mutate and deliver a subtask or a slice group; returns
+        the rows delivered per member, in member order.
+
+        A wire or Delta destination gets one ``deliver`` per member at
+        the member's planned flushSize, which drives the bulk batch size
+        exactly as in the reference (transfer.js:145, :159-167). A
+        parquet destination gets ONE ``upsert`` for the whole group: the
+        members' scans are tagged with their position and unioned, and
+        the MERGE keeps the later member's row on a key two members
+        share, so the rows match member-by-member delivery while the
+        fixed cost of a MERGE (its Spark jobs and bucket rewrites) is
+        paid once per slice instead of once per size range."""
+        group = work if isinstance(work, SliceGroup) else SliceGroup((work,))
+        if self.merges:
+            tagged = [
+                self._scan(sub).withColumn(self.ORDINAL, F.lit(i))
+                for i, sub in enumerate(group)
+            ]
+            merged = upsert(
+                self.spark, self.dest,
+                functools.reduce(DataFrame.unionByName, tagged),
+                ordinal=self.ORDINAL,
+            )
+            delivered = [merged.get(i, 0) for i in range(len(group))]
         else:
-            delivered = upsert(self.spark, self.dest, df)
+            delivered = [
+                self.dest.deliver(
+                    self.spark, self._scan(sub), flush_size=_flush_size(sub)
+                )
+                for sub in group
+            ]
         if self.update_callback:
-            self.update_callback(delivered, subtask.count)
+            for sub, n in zip(group, delivered):
+                self.update_callback(n, sub.count)
         return delivered
 
     def transfer_indices(self, names: str) -> int:
@@ -845,6 +899,16 @@ class Engine:
         logged and the subtask is NOT re-queued (worker.js:108-111) —
         it reappears on the next build_backlog.
 
+        Every pop takes a slice group (``TaskState.pop``). When the
+        destination MERGEs (a parquet store), the group is the head
+        subtask plus the other size ranges of its (index, type) queued
+        right behind it, capped by what is left of ``max_subtasks``,
+        and it is delivered in ONE ``upsert``; ES and Delta
+        destinations pop one subtask at a time. A group whose delivery
+        fails (its MERGE did not land) is retried member by member, so
+        only a member that fails on its own is logged; once the MERGE
+        has landed, a checkpoint error fails only the member it hit.
+
         ``parallelism`` > 1 submits that many subtasks as CONCURRENT
         Spark jobs from driver threads — the analog of the reference's
         N worker processes, useful when subtasks are small relative to
@@ -861,7 +925,12 @@ class Engine:
         CAVEAT: concurrent subtasks that write the SAME destination
         index serialize on the index lock — subtasks for different
         indices/types are the parallel case. On Delta (transactional
-        MERGE) they could truly interleave.
+        MERGE) they could truly interleave. And when the destination
+        MERGEs, the checkpoint granularity is the slice group: a crash
+        between a group's MERGE and its ``complete`` calls leaves every
+        member in progress, so the next rebuild re-delivers the whole
+        slice — at most one slice per crash, and the MERGE is
+        idempotent, so the rows come out the same.
         """
         task = self.get_task(task_id)
         state = TaskState(self.state_root, task_id)
@@ -884,39 +953,82 @@ class Engine:
         lock = threading.Lock()
         done = [0]
 
+        def deliver(group: SliceGroup) -> list:
+            """Move a group's data; returns the rows delivered per
+            member (None for index and template transfers)."""
+            head = group.members[0]
+            if head.kind == "documents":
+                return transfer.transfer_data(group)
+            if head.kind == "index":
+                transfer.transfer_indices(head.names)
+            elif head.kind == "template":
+                transfer.transfer_templates(head.names)
+            else:
+                raise TaskError(f"unknown subtask kind {head.kind}")
+            return [None]
+
+        def settle(sub: Subtask, delivered: Optional[int]) -> None:
+            """Checkpoint one delivered subtask; a state error fails it
+            (and re-raises when the task's state is gone)."""
+            with lock:
+                try:
+                    if delivered is not None:
+                        state.update_progress(
+                            sub,
+                            Progress(tick=1, transferred=delivered, total=sub.count),
+                        )
+                    state.complete(sub)
+                except Exception:
+                    state.fail(sub, traceback.format_exc(limit=5))
+
+        def run_alone(sub: Subtask) -> None:
+            try:
+                (delivered,) = deliver(SliceGroup((sub,)))
+            except Exception:
+                with lock:
+                    state.fail(sub, traceback.format_exc(limit=5))
+                return
+            settle(sub, delivered)
+
         def run_one() -> bool:
             with lock:
                 if not self._running:
                     return False
-                if max_subtasks is not None and done[0] >= max_subtasks:
+                left = None if max_subtasks is None else max_subtasks - done[0]
+                if left is not None and left <= 0:
                     return False
                 # pop + initial progress in ONE atomic round — a
                 # separate update_progress left a window where the
                 # subtask was in no persisted structure and a
                 # concurrent rebuild re-enqueued it (duplicate slice)
-                sub = state.pop(with_progress=True)
-                if sub is None:
+                group = state.pop(
+                    with_progress=True, max_members=left if transfer.merges else 1
+                )
+                if group is None:
                     return False
-                done[0] += 1
+                done[0] += len(group)
+            if len(group) == 1:
+                run_alone(group.members[0])
+                return True
             try:
-                if sub.kind == "documents":
-                    transferred = transfer.transfer_data(sub)
-                    with lock:
-                        state.update_progress(
-                            sub,
-                            Progress(tick=1, transferred=transferred, total=sub.count),
-                        )
-                elif sub.kind == "index":
-                    transfer.transfer_indices(sub.names)
-                elif sub.kind == "template":
-                    transfer.transfer_templates(sub.names)
-                else:
-                    raise TaskError(f"unknown subtask kind {sub.kind}")
-                with lock:
-                    state.complete(sub)
+                delivered = deliver(group)
             except Exception:
-                with lock:
-                    state.fail(sub, traceback.format_exc(limit=5))
+                # the group's MERGE did not land: retry member by
+                # member, so only a member that fails on its own is
+                # logged and left for the next rebuild (a stop skips
+                # the retries and leaves every member for it)
+                err = traceback.format_exc(limit=5)
+                for sub in group:
+                    if self._running:
+                        run_alone(sub)
+                    else:
+                        with lock:
+                            state.fail(sub, f"slice group failed; not retried (stopped)\n{err}")
+                return True
+            # the MERGE landed: from here a member fails only on its own
+            # checkpoint, never by re-delivering
+            for sub, n in zip(group, delivered):
+                settle(sub, n)
             return True
 
         try:
@@ -1004,6 +1116,10 @@ class Engine:
             "manager": "running" if self._running else "stopped",
             "tasks": tasks,
         }
+
+
+def _flush_size(subtask: Subtask) -> int:
+    return subtask.flush_size if (subtask.flush_size or 0) > 0 else 100
 
 
 def _task_to_dict(task: Task) -> dict:

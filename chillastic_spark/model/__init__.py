@@ -162,6 +162,31 @@ class Subtask:
         (subtask.js:61-74: minSize>=0 and maxSize>=0)."""
         return self.min_size >= 0 and self.max_size >= 0
 
+    def slice_key(self) -> Optional[tuple]:
+        """(index, type) of a documents subtask — what its size-range
+        siblings share — or None for index/template transfers."""
+        return (self.index, self.type) if self.kind == "documents" else None
+
+
+@dataclass(frozen=True)
+class SliceGroup:
+    """Subtasks popped and delivered together: a head subtask plus the
+    backlog entries right behind it with the same ``slice_key`` (the
+    other size ranges of its (index, type)). ``count`` is the members'
+    planned document total."""
+
+    members: tuple[Subtask, ...]  # backlog (FIFO) order
+
+    @property
+    def count(self) -> int:
+        return sum(m.count for m in self.members)
+
+    def __iter__(self):
+        return iter(self.members)
+
+    def __len__(self) -> int:
+        return len(self.members)
+
 
 @dataclass
 class Progress:

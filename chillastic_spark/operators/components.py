@@ -27,6 +27,7 @@ round saved fewer rounds than its two extra label-table shuffles cost.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -47,6 +48,25 @@ from chillastic_spark.persist import materialize, release
 # to pin the loop's round budget).
 _LOCAL_CAP_ENV = "CHILLASTIC_CC_LOCAL_CAP"
 _LOCAL_CAP_DEFAULT = 200_000
+
+
+def _local_cap() -> int:
+    """``CHILLASTIC_CC_LOCAL_CAP``, read per call (tests flip it). A
+    value that is not an integer must not crash every CC consumer:
+    warn on stderr and use the default, like ``CHILLASTIC_STORE_BUCKETS``
+    (sources._default_buckets)."""
+    raw = os.environ.get(_LOCAL_CAP_ENV)
+    if raw is None:
+        return _LOCAL_CAP_DEFAULT
+    try:
+        return int(raw)
+    except ValueError:
+        print(
+            f"chillastic: {_LOCAL_CAP_ENV}={raw!r} is not an integer; "
+            f"using {_LOCAL_CAP_DEFAULT}",
+            file=sys.stderr,
+        )
+        return _LOCAL_CAP_DEFAULT
 
 
 def _local_components(rows) -> "dict | None":
@@ -108,7 +128,7 @@ def connected_components(
     # no longer needs. Isolated A/B at sf0.1: 0.77 vs 1.59s on the
     # 256-edge jaccard graph, 0.69 vs 3.33s on the 1450-edge embedding
     # graph (7 interleaved reps, labels identical).
-    cap = int(os.environ.get(_LOCAL_CAP_ENV, _LOCAL_CAP_DEFAULT))
+    cap = _local_cap()
     head = sym.limit(cap + 1).collect() if cap > 0 else None
     if head is not None and len(head) <= cap:
         comp = _local_components((r[0], r[1]) for r in head)

@@ -62,14 +62,15 @@ def _key_cond(a: DataFrame, b: DataFrame):
     )
 
 
-def _normalise(df: DataFrame) -> DataFrame:
+def _normalise(df: DataFrame, *keep: str) -> DataFrame:
+    """Project onto the envelope schema (plus the ``keep`` columns)."""
     cols = []
     for f_ in ENVELOPE_SCHEMA.fields:
         if f_.name in df.columns:
             cols.append(F.col(f_.name).cast(f_.dataType))
         else:
             cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
-    return df.select(*cols)
+    return df.select(*cols, *keep)
 
 
 def _auto_buckets(index_path: str) -> int:
@@ -95,32 +96,52 @@ def upsert(
     store: DocumentStore,
     df: DataFrame,
     n_buckets: "int | None" = None,
-) -> int:
+    ordinal: "str | None" = None,
+) -> dict[int, int]:
     """MERGE ``df`` into ``store`` keyed on (_index,_type,_id).
 
     Within-batch duplicates keep ONE row chosen by a deterministic
     tie-break (highest md5(_source), then _size) — "arrival order" is
     not meaningful in a distributed DataFrame, and the stable winner
     keeps re-runs (and the Delta sink, which pins the SAME rule)
-    byte-identical. Returns rows delivered. ``n_buckets``
+    byte-identical. Returns {ordinal: rows delivered} (below; a batch
+    with no ``ordinal`` column is all ordinal 0). ``n_buckets``
     applies only when an index is first converted to the bucketed
     layout (default: sized from the index bytes, see _auto_buckets);
     an already-bucketed index keeps its pinned N.
+
+    ``ordinal`` names an integer column that tags each row with the
+    batch it came from when several batches are MERGEd as one (the
+    engine's slice group: one tag per size-range subtask). Duplicates
+    then keep the HIGHEST ordinal first and fall back to the tie-break
+    above — the row a one-batch-at-a-time delivery in ordinal order
+    would have left. The column is never written; a row a later
+    ordinal superseded counts for that one only, and an ordinal left
+    with no rows is absent from the result.
+    The engine checkpoints such a group only after this call returns,
+    so a crash in between re-delivers the whole group on resume — at
+    most one slice, and re-MERGEing it leaves the same rows.
     """
-    df = _normalise(df)
+    keep = (ordinal,) if ordinal else ()
+    df = _normalise(df, *keep)
     # Within-batch conflicts on the same key keep ONE row chosen by a
     # DETERMINISTIC tie-break (payload hash). "Arrival order" is not
     # meaningful after a distributed mutate (and would vary with
     # partitioning); a stable winner keeps re-runs byte-identical.
     w_rank = F.row_number().over(
-        Window.partitionBy(*KEY).orderBy(F.desc(F.md5(F.col("_source"))), F.desc("_size"))
+        Window.partitionBy(*KEY).orderBy(
+            *[F.desc(c) for c in keep],
+            F.desc(F.md5(F.col("_source"))),
+            F.desc("_size"),
+        )
     )
     df = df.withColumn("__rk", w_rank).filter(F.col("__rk") == 1).drop("__rk")
     df = df.cache()
     try:
         # ONE aggregate over the cached batch validates it and sizes
-        # every destination: rows per index plus a NULL-_id flag
-        per_index = df.groupBy("_index").agg(
+        # every destination (and every ordinal): rows per group plus a
+        # NULL-_id flag
+        per_index = df.groupBy("_index", *keep).agg(
             F.count(F.lit(1)).alias("n"),
             F.max(F.col("_id").isNull()).alias("null_id"),
         ).collect()
@@ -140,8 +161,9 @@ def upsert(
                 "upsert: rows with NULL _id cannot be delivered — the "
                 "merge key and the bucket hash both need a document id"
             )
-        for index in [r["_index"] for r in per_index]:
-            batch = df.filter(F.col("_index") == index)
+        rows = df.drop(*keep)
+        for index in sorted({r["_index"] for r in per_index}):
+            batch = rows.filter(F.col("_index") == index)
             path = store.index_path(index)
             # the guard heals any swap a crashed prior delivery left
             # open BEFORE this merge reads the index
@@ -188,7 +210,11 @@ def upsert(
                         .unionByName(batch)
                     )
                     _replace_buckets(store, index, nb, merged, touched)
-        return sum(r["n"] for r in per_index)
+        delivered: dict[int, int] = {}
+        for r in per_index:
+            tag = r[ordinal] if ordinal else 0
+            delivered[tag] = delivered.get(tag, 0) + r["n"]
+        return delivered
     finally:
         df.unpersist()
 

@@ -173,18 +173,26 @@ def _recover_interrupted_swap(path: str) -> None:
         shutil.rmtree(stale)
 
 
+def _bucket_swap_leftovers(index_path: str) -> list:
+    """Live paths of the buckets a crashed :func:`swap_dir` left
+    ``bucket-NNNN.old-*`` copies of inside the index dir."""
+    if not os.path.isdir(index_path):
+        return []
+    return sorted({
+        os.path.join(index_path, d.split(".old-", 1)[0])
+        for d in os.listdir(index_path)
+        if ".old-" in d
+    })
+
+
 def _heal_swaps(index_path: str) -> None:
     """Heal BOTH swap levels of one index: the index dir itself, then
     every bucket — keyed off the ``.old-`` LEFTOVERS, because
     ``bucket_paths`` only lists existing dirs and a bucket whose live
     dir vanished mid-swap would otherwise stay invisible forever."""
     _recover_interrupted_swap(index_path)
-    if os.path.isdir(index_path):
-        for d in os.listdir(index_path):
-            if ".old-" in d:
-                _recover_interrupted_swap(
-                    os.path.join(index_path, d.split(".old-", 1)[0])
-                )
+    for bucket in _bucket_swap_leftovers(index_path):
+        _recover_interrupted_swap(bucket)
 
 
 def bucket_expr(n_buckets: int) -> F.Column:
@@ -503,9 +511,10 @@ class DocumentStore:
         of :func:`store_swap_window` (r10): a read can no longer land
         between a live swap's two renames and silently serve an empty
         or bucket-incomplete frame. A dir missing UNDER the lock with
-        ``.old-``/``.compact-`` siblings is a crashed swap — healed
-        once (by entering :meth:`mutation`) and retried, so a reader is
-        never the caller that has to know about writer crashes.
+        ``.old-``/``.compact-`` siblings, or a ``bucket-NNNN.old-``
+        dir inside it, is a crashed swap — healed once (by entering
+        :meth:`mutation`) and retried, so a reader is never the caller
+        that has to know about writer crashes.
         """
         path = self.index_path(index)
         if not os.path.isdir(os.path.dirname(path)):
@@ -524,7 +533,10 @@ class DocumentStore:
         df = None
         for attempt in (0, 1):
             with self._read_snapshot(index):
-                if os.path.isdir(path):
+                # a bucket swap that died mid-window leaves its only
+                # copy in bucket-NNNN.old-*: heal before listing
+                crashed_bucket = attempt == 0 and bool(_bucket_swap_leftovers(path))
+                if os.path.isdir(path) and not crashed_bucket:
                     if self.bucket_count(index) is not None:
                         paths = self.bucket_paths(index, buckets)
                         if not paths:
@@ -534,8 +546,9 @@ class DocumentStore:
                         df = spark.read.schema(ENVELOPE_SCHEMA).parquet(path)
                     break
             # absent under the lock: genuinely unbuilt, or a crashed
-            # swap whose leftovers hold the data — heal once, retry
-            if attempt == 0 and self._swap_leftovers(index):
+            # swap (of the index or a bucket) whose leftovers hold the
+            # data — heal once, retry
+            if attempt == 0 and (crashed_bucket or self._swap_leftovers(index)):
                 with self.mutation(index):  # entering the guard heals
                     pass
                 continue

@@ -52,7 +52,7 @@ def _bucket_sigs(store, index):
 
 def test_first_upsert_migrates_to_bucketed_layout(spark, tmp_path):
     store = DocumentStore(str(tmp_path / "s"))
-    assert upsert(spark, store, _corpus(spark), n_buckets=N_BUCKETS) == 200
+    assert upsert(spark, store, _corpus(spark), n_buckets=N_BUCKETS) == {0: 200}
     assert store.bucket_count("ix") == N_BUCKETS
     assert len(store.bucket_paths("ix")) <= N_BUCKETS
     assert store.read(spark, "ix").count() == 200

@@ -364,8 +364,8 @@ def test_upsert_idempotent_and_updates(spark, tmp_path, store_factory):
         [("i1", "t", "a", '{"v": 1}', 8), ("i1", "t", "b", '{"v": 2}', 8)],
         ENVELOPE_SCHEMA,
     )
-    assert upsert(spark, dst, batch) == 2
-    assert upsert(spark, dst, batch) == 2  # re-delivery → no dups
+    assert upsert(spark, dst, batch) == {0: 2}
+    assert upsert(spark, dst, batch) == {0: 2}  # re-delivery → no dups
     assert dst.count(spark, "i1") == 2
     updated = spark.createDataFrame(
         [("i1", "t", "b", '{"v": 99}', 9)], ENVELOPE_SCHEMA
@@ -498,3 +498,238 @@ def test_removed_task_state_is_not_resurrected(spark, tmp_path):
     with pytest.raises(TaskError, match="removed"):
         s2.log_error(None, "boom")  # shared-mode atomic op
     assert not os.path.exists(s1.path)  # nothing resurrected
+
+
+# ----------------------------------------------------------- slice groups
+# 30 docs sized 10..300: size planning splits the one (index, type) into
+# three size ranges, [0,184) [184,271) [271,301), of 18, 9 and 3 docs
+SIZED = [
+    {"_id": str(i), "_type": "t", "_size": 10 * (i + 1), "_source": {"n": i}}
+    for i in range(30)
+]
+
+# maps docs from every size range onto 4 keys: a later size range must
+# win a key it shares with an earlier one, as in one-at-a-time delivery
+COLLAPSE = """
+TYPE = "data"
+def predicate(doc, args):
+    return True
+def mutate(doc, args):
+    doc["_source"]["orig"] = doc["_id"]
+    doc["_id"] = "k" + str(int(doc["_id"]) % 4)
+    return doc
+"""
+
+BOOM_MIDDLE = """
+TYPE = "data"
+def predicate(doc, args):
+    return 184 <= doc["_size"] < 271
+def mutate(doc, args):
+    raise RuntimeError("boom in the middle range")
+"""
+
+
+def _sized_task(eng, src, dst, task_id="t1", mutators=()):
+    eng.add_task(task_id, _task(
+        src, dst, transfer={"from_indices": "ix"},
+        mutators=[ActionRef(id=m) for m in mutators],
+    ))
+    backlog = TaskState(eng.state_root, task_id).data["backlog"]
+    # the premise: one slice, three size ranges queued back to back
+    assert [c for _, c in backlog] == [18, 9, 3]
+    return backlog
+
+
+def _merge_calls(monkeypatch):
+    """Record the member count of each ``upsert`` the engine runs."""
+    import chillastic_spark.engine as E
+
+    calls, members = [], []
+    orig_transfer, orig_upsert = Transfer.transfer_data, E.upsert
+
+    def transfer(self, work):
+        members.append(len(work))
+        return orig_transfer(self, work)
+
+    def merge(*a, **k):
+        calls.append(members[-1])
+        return orig_upsert(*a, **k)
+
+    monkeypatch.setattr(Transfer, "transfer_data", transfer)
+    monkeypatch.setattr(E, "upsert", merge)
+    return calls
+
+
+def _dst_rows(spark, dst):
+    return sorted(
+        (r["_type"], r["_id"], r["_source"]) for r in dst.read(spark, "ix").collect()
+    )
+
+
+def test_slice_group_merges_once_and_matches_member_by_member(
+    spark, tmp_path, store_factory, monkeypatch
+):
+    src = store_factory("src", {"ix": SIZED})
+    eng = _engine(spark, tmp_path)
+    eng.mutators.add("collapse", COLLAPSE)
+    calls = _merge_calls(monkeypatch)
+    transferred = []
+    orig_progress = TaskState.update_progress
+
+    def progress(self, sub, p):
+        transferred.append(p.transferred)
+        return orig_progress(self, sub, p)
+
+    monkeypatch.setattr(TaskState, "update_progress", progress)
+
+    grouped = store_factory("grouped")
+    _sized_task(eng, src, grouped, "tg", ["collapse"])
+    status = eng.run_task("tg")
+    assert calls == [3]  # one MERGE carried all three ranges
+    assert status["completed"] == 30 and status["errors"] == 0
+    # each member is progressed with the rows of its own that the MERGE
+    # kept: together, exactly the rows written
+    assert sum(transferred) == len(_dst_rows(spark, grouped)) == 4
+
+    single = store_factory("single")
+    _sized_task(eng, src, single, "ts", ["collapse"])
+    calls.clear()
+    while eng.run_task("ts", max_subtasks=1)["backlog"]:
+        pass
+    assert calls == [1, 1, 1]  # one subtask per call
+
+    assert _dst_rows(spark, grouped) == _dst_rows(spark, single)
+    winners = {
+        r["_id"]: json.loads(r["_source"])["orig"]
+        for r in grouped.read(spark, "ix").collect()
+    }
+    # docs 27..29 are the last size range: they win k3, k0, k1; k2's
+    # last sighting is in the middle range (18, 22 or 26)
+    assert winners["k3"] == "27" and winners["k0"] == "28" and winners["k1"] == "29"
+    assert winners["k2"] in {"18", "22", "26"}
+
+
+def test_slice_group_failure_retries_member_by_member(
+    spark, tmp_path, store_factory, monkeypatch
+):
+    src = store_factory("src", {"ix": SIZED})
+    dst = store_factory("dst")
+    eng = _engine(spark, tmp_path)
+    eng.mutators.add("boom", BOOM_MIDDLE)
+    backlog = _sized_task(eng, src, dst, mutators=["boom"])
+    calls = _merge_calls(monkeypatch)
+    status = eng.run_task("t1")
+    # the group's MERGE failed, then each member went alone
+    assert calls == [3, 1, 1, 1]
+    errs = eng.get_task_errors("t1")
+    assert len(errs) == 1 and "boom in the middle range" in errs[0]["message"]
+    assert errs[0]["subtask_id"] == backlog[1][0]
+    state = TaskState(eng.state_root, "t1").data
+    assert sorted(state["completed"]) == sorted([backlog[0][0], backlog[2][0]])
+    assert state["progress"] == {} and state["backlog"] == []
+    assert status["completed"] == 21
+    assert dst.count(spark, "ix") == 21
+
+
+def test_checkpoint_error_after_group_merge_does_not_redeliver(
+    spark, tmp_path, store_factory, monkeypatch
+):
+    src = store_factory("src", {"ix": SIZED})
+    dst = store_factory("dst")
+    eng = _engine(spark, tmp_path)
+    backlog = _sized_task(eng, src, dst)
+    calls = _merge_calls(monkeypatch)
+    orig_complete = TaskState.complete
+
+    def complete(self, sub):
+        if sub.subtask_id() == backlog[0][0]:
+            raise RuntimeError("checkpoint lost")
+        return orig_complete(self, sub)
+
+    monkeypatch.setattr(TaskState, "complete", complete)
+    eng.run_task("t1")
+    assert calls == [3]  # the landed MERGE is never re-run for a member
+    errs = eng.get_task_errors("t1")
+    assert len(errs) == 1 and "checkpoint lost" in errs[0]["message"]
+    assert errs[0]["subtask_id"] == backlog[0][0]
+    state = TaskState(eng.state_root, "t1").data
+    assert sorted(state["completed"]) == sorted([backlog[1][0], backlog[2][0]])
+    assert state["progress"] == {}
+    assert dst.count(spark, "ix") == 30
+
+
+def test_stop_during_failed_group_skips_member_retries(
+    spark, tmp_path, store_factory, monkeypatch
+):
+    src = store_factory("src", {"ix": SIZED})
+    dst = store_factory("dst")
+    eng = _engine(spark, tmp_path)
+    eng.mutators.add("boom", BOOM_MIDDLE)
+    _sized_task(eng, src, dst, mutators=["boom"])
+    calls = _merge_calls(monkeypatch)
+    failing = Transfer.transfer_data
+
+    def stop_then_transfer(self, work):
+        eng.stop()
+        return failing(self, work)
+
+    monkeypatch.setattr(Transfer, "transfer_data", stop_then_transfer)
+    eng.run_task("t1")
+    assert calls == [3]  # no member was retried after the stop
+    errs = eng.get_task_errors("t1")
+    assert len(errs) == 3 and all("not retried" in e["message"] for e in errs)
+    state = TaskState(eng.state_root, "t1").data
+    assert state["progress"] == {} and state["completed"] == {}
+    eng.start()
+    eng.build_backlog("t1")  # nothing left in flight: no force needed
+    assert len(TaskState(eng.state_root, "t1").data["backlog"]) == 3
+
+
+def test_run_all_round_robin_delivers_one_subtask_per_call(
+    spark, tmp_path, store_factory, monkeypatch
+):
+    src = store_factory("src", {"ix": SIZED})
+    eng = _engine(spark, tmp_path)
+    _sized_task(eng, src, store_factory("d1"), "ta")
+    _sized_task(eng, src, store_factory("d2"), "tb")
+    calls = _merge_calls(monkeypatch)
+    status = eng.run_all()
+    assert calls == [1] * 6
+    assert all(t["completed"] == 30 for t in status["tasks"].values())
+
+
+class _Killed(BaseException):
+    """Stands in for the process dying: no ``except Exception`` sees it."""
+
+
+def test_crash_between_group_merge_and_complete_rebuilds_doc_exact(
+    spark, tmp_path, store_factory, monkeypatch
+):
+    src = store_factory("src", {"ix": SIZED})
+    eng = _engine(spark, tmp_path)
+    eng.mutators.add("collapse", COLLAPSE)
+    clean = store_factory("clean")
+    _sized_task(eng, src, clean, "tc", ["collapse"])
+    eng.run_task("tc")
+
+    dst = store_factory("dst")
+    _sized_task(eng, src, dst, "t1", ["collapse"])
+    with monkeypatch.context() as m:
+        def die(self, subtask):
+            raise _Killed()
+
+        m.setattr(TaskState, "complete", die)
+        with pytest.raises(_Killed):
+            eng.run_task("t1")
+    # the MERGE landed; every member is still in progress, none completed
+    assert _dst_rows(spark, dst) == _dst_rows(spark, clean)
+    state = TaskState(eng.state_root, "t1").data
+    assert len(state["progress"]) == 3 and state["completed"] == {}
+
+    with pytest.raises(TaskError, match="in-flight"):
+        eng.build_backlog("t1")
+    eng.build_backlog("t1", force=True)
+    status = eng.run_task("t1")
+    assert status["completed"] == 30 and status["backlog"] == 0
+    assert status["errors"] == 0
+    assert _dst_rows(spark, dst) == _dst_rows(spark, clean)

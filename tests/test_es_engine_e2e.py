@@ -139,6 +139,60 @@ def test_planned_flush_size_drives_scroll_and_bulk(spark, tmp_path, clusters):
     assert len(slice_specs) >= 2  # disjoint slices, one scroll each
 
 
+def test_wire_destination_gets_one_deliver_per_subtask(
+    spark, tmp_path, clusters, store_factory, monkeypatch
+):
+    """Slice groups are for MERGE destinations only: a wire destination
+    still gets one ``deliver`` per size-range subtask, each at that
+    subtask's own planned flushSize (transfer.js:145, :159-167)."""
+    import dataclasses
+
+    from chillastic_spark.engine import TaskState
+    from chillastic_spark.model import Subtask
+    from chillastic_spark.sources.es_rest import ESStore
+
+    _src, _, dst, dst_url = clusters
+    # sized 10..300: planning splits the one slice into three ranges
+    src = store_factory("src", {"ix": [
+        {"_id": f"d{i}", "_type": "t1", "_size": 10 * (i + 1), "_source": {"v": i}}
+        for i in range(30)
+    ]})
+    eng = Engine(spark, str(tmp_path / "state"))
+    eng.add_task("pq2es", Task(
+        source=src.root, destination=dst_url,
+        transfer=TransferSpec(from_indices="ix"),
+    ))
+    state = TaskState(eng.state_root, "pq2es").acquire_writer()
+    try:
+        subs = [Subtask.from_id(sid, c) for sid, c in state.data["backlog"]]
+        assert len(subs) == 3 and len({s.slice_key() for s in subs}) == 1
+        # distinct flush sizes, so each deliver call shows whose it is
+        state.data["backlog"] = [
+            [dataclasses.replace(s, flush_size=f).subtask_id(), s.count]
+            for s, f in zip(subs, (4, 5, 6))
+        ]
+        state.save()
+    finally:
+        state.release_writer()
+
+    calls = []
+    orig = ESStore.deliver
+
+    def deliver(self, spark, df, flush_size=100):
+        first = len(dst.bulk_bodies)
+        out = orig(self, spark, df, flush_size=flush_size)
+        sizes = [len(b.strip().splitlines()) // 2 for b in dst.bulk_bodies[first:]]
+        calls.append((flush_size, out, max(sizes)))
+        return out
+
+    monkeypatch.setattr(ESStore, "deliver", deliver)
+    status = eng.run_task("pq2es")
+    assert status["completed"] == 30 and status["errors"] == 0
+    assert [(f, n) for f, n, _ in calls] == [(4, 18), (5, 9), (6, 3)]
+    assert all(biggest <= f for f, _, biggest in calls)
+    assert len(dst.contents("ix")) == 30
+
+
 TYPELESS_DATA = """
 TYPE = "data"
 def predicate(doc, args):

@@ -108,9 +108,10 @@ def _worker_drain(state_root, out_q):
     st = TaskState(state_root, "coop")
     mine = []
     while True:
-        sub = st.pop()
-        if sub is None:
+        group = st.pop()
+        if group is None:
             break
+        (sub,) = group
         mine.append(sub.subtask_id())
         st.complete(sub)
     out_q.put(mine)
@@ -160,9 +161,10 @@ def _stress_worker(state_root, out_q, victim_q=None, victim_after=None):
 
     mine = []
     while True:
-        sub = st.pop()
-        if sub is None:
+        group = st.pop()
+        if group is None:
             break
+        (sub,) = group
         st.update_progress(sub, Progress(tick=0, transferred=0, total=sub.count))
         if victim_q is not None and len(mine) >= victim_after:
             victim_q.put(sub.subtask_id())

@@ -550,6 +550,25 @@ def test_connected_components_local_fast_path_matches_loop(spark):
     assert calls["n"] > 1, "cap did not send the big graph to the loop"
 
 
+@pytest.mark.parametrize("value", ["lots", "1e5", ""])
+def test_connected_components_malformed_local_cap_falls_back(
+    spark, monkeypatch, capsys, value
+):
+    """A CHILLASTIC_CC_LOCAL_CAP that is not an integer warns on stderr
+    and takes the default cap instead of raising ValueError inside
+    every connected-components consumer."""
+    import chillastic_spark.operators.components as C
+
+    monkeypatch.setenv("CHILLASTIC_CC_LOCAL_CAP", value)
+    assert C._local_cap() == C._LOCAL_CAP_DEFAULT
+    err = capsys.readouterr().err
+    assert "CHILLASTIC_CC_LOCAL_CAP" in err and repr(value) in err
+    edges = spark.createDataFrame([(1, 2), (3, 2), (7, 8)], "id_a long, id_b long")
+    got = {(r["node"], r["component"]) for r in C.connected_components(edges).collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+    assert "CHILLASTIC_CC_LOCAL_CAP" in capsys.readouterr().err
+
+
 def test_substring_dup_stats_planted_span(spark):
     """ExactSubstr coverage: a 6-token span shared verbatim by two docs
     is found; a doc repeating a span internally counts both instances;

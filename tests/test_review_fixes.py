@@ -18,13 +18,13 @@ def test_upsert_returns_delivered_not_index_total(spark, store_factory):
     first = spark.createDataFrame(
         [("i1", "t", str(i), '{"v":1}', 5) for i in range(10)], ENVELOPE_SCHEMA
     )
-    assert upsert(spark, dst, first) == 10
+    assert upsert(spark, dst, first) == {0: 10}
     second = spark.createDataFrame(
         [("i1", "t", "new1", '{"v":2}', 5), ("i1", "t", "new2", '{"v":2}', 5)],
         ENVELOPE_SCHEMA,
     )
     # review finding #1: returned 12 (post-merge index size) before
-    assert upsert(spark, dst, second) == 2
+    assert upsert(spark, dst, second) == {0: 2}
     assert dst.count(spark, "i1") == 12
 
 

@@ -189,7 +189,7 @@ def test_upsert_rejects_null_id_rows(spark, tmp_path):
     good = _envelopes(
         spark, [("ix", "t", f"d{i}", _json.dumps({"v": i}), 10) for i in range(6)]
     )
-    assert upsert(spark, store, good) == 6
+    assert upsert(spark, store, good) == {0: 6}
     bad = _envelopes(
         spark,
         [("ix", "t", None, _json.dumps({"v": 99}), 10),
@@ -246,7 +246,7 @@ def test_upsert_preserves_type_partitioned_layout(spark, tmp_path):
         [("ix", "ta", "d0", _json.dumps({"v": 100}), 10),   # mutate
          ("ix", "tb", "d99", _json.dumps({"v": 99}), 10)],  # insert
     )
-    assert upsert(spark, store, batch) == 2
+    assert upsert(spark, store, batch) == {0: 2}
     # layout preserved: still _type= dirs, never a bucket marker
     assert any(d.startswith("_type=") for d in os.listdir(path))
     assert not os.path.exists(os.path.join(path, BUCKET_MARKER))
@@ -254,7 +254,7 @@ def test_upsert_preserves_type_partitioned_layout(spark, tmp_path):
     assert got["d0"] == {"v": 100} and got["d99"] == {"v": 99}
     assert len(got) == 9
     # idempotent re-merge still works on the preserved layout
-    assert upsert(spark, store, batch) == 2
+    assert upsert(spark, store, batch) == {0: 2}
     assert store.count(spark, "ix") == 9
 
 

@@ -131,7 +131,7 @@ def test_pop_with_progress_is_one_atomic_round(tmp_path):
     with st:
         st.enqueue(Subtask(kind="index", names="ix1", count=1), save=False)
         st.save()
-        sub = st.pop(with_progress=True)
+        (sub,) = st.pop(with_progress=True)
         assert sub.names == "ix1"
         on_disk = json.load(open(st.path))
         assert on_disk["backlog"] == []
