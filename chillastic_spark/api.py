@@ -140,16 +140,12 @@ def create_app(
         )
 
         def run():
-            try:
-                rows = ann_query_index(
-                    engine.spark, vector_index_dir, q, k=k, probes=probes
-                ).collect()
-            except Exception as e:
-                # missing/empty index dir surfaces as AnalysisException
-                # — a 404 like the sibling read routes, never a 500
-                if "PATH_NOT_FOUND" in str(e) or "Unable to infer" in str(e):
-                    return jsonify({"error": "vector index not built"}), 404
-                raise
+            # an unbuilt index (no meta.json) is a FileNotFoundError —
+            # handle() turns it into a 404; a built index with no data
+            # serves empty hits
+            rows = ann_query_index(
+                engine.spark, vector_index_dir, q, k=k, probes=probes
+            ).collect()
             return jsonify(
                 {
                     "hits": [

@@ -20,7 +20,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chillastic_spark.locks import FileLock, LockHeld
+from chillastic_spark.locks import FileLock, LockHeld, write_json
 from chillastic_spark.model import (
     ActionRef, Progress, SliceGroup, Subtask, Task, validate_object_id,
 )
@@ -83,10 +83,7 @@ class TaskState:
         }
 
     def save(self) -> None:
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.data, f, indent=1)
-        os.replace(tmp, self.path)
+        write_json(self.path, self.data, indent=1)
         self._seen_on_disk = True
 
     def reset_orphan(self) -> None:
@@ -483,14 +480,11 @@ class Engine:
                         self._tasks[k] = _task_from_dict(v)
             for k in removed:
                 self._tasks.pop(k, None)
-            import uuid as _uuid
-
-            tmp = f"{self._tasks_path()}.{_uuid.uuid4().hex[:8]}.tmp"
-            with open(tmp, "w") as f:
-                json.dump(
-                    {k: _task_to_dict(t) for k, t in self._tasks.items()}, f, indent=1
-                )
-            os.replace(tmp, self._tasks_path())
+            write_json(
+                self._tasks_path(),
+                {k: _task_to_dict(t) for k, t in self._tasks.items()},
+                indent=1,
+            )
             self._persisted = set(self._tasks)
 
     def add_task(self, task_id: str, task: Task) -> TaskState:

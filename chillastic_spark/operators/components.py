@@ -26,12 +26,10 @@ round saved fewer rounds than its two extra label-table shuffles cost.
 """
 from __future__ import annotations
 
-import os
-import sys
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chillastic_spark.knobs import env_knob
 from chillastic_spark.persist import materialize, release
 
 # Small-graph fast path (r11): below this many SYMMETRIC edge rows
@@ -51,22 +49,9 @@ _LOCAL_CAP_DEFAULT = 200_000
 
 
 def _local_cap() -> int:
-    """``CHILLASTIC_CC_LOCAL_CAP``, read per call (tests flip it). A
-    value that is not an integer must not crash every CC consumer:
-    warn on stderr and use the default, like ``CHILLASTIC_STORE_BUCKETS``
-    (sources._default_buckets)."""
-    raw = os.environ.get(_LOCAL_CAP_ENV)
-    if raw is None:
-        return _LOCAL_CAP_DEFAULT
-    try:
-        return int(raw)
-    except ValueError:
-        print(
-            f"chillastic: {_LOCAL_CAP_ENV}={raw!r} is not an integer; "
-            f"using {_LOCAL_CAP_DEFAULT}",
-            file=sys.stderr,
-        )
-        return _LOCAL_CAP_DEFAULT
+    """``CHILLASTIC_CC_LOCAL_CAP``, read per call (tests flip it); a
+    value that is not an integer falls back to the default."""
+    return env_knob(_LOCAL_CAP_ENV, _LOCAL_CAP_DEFAULT, int, "an integer")
 
 
 def _local_components(rows) -> "dict | None":

@@ -22,6 +22,7 @@ import uuid
 import types
 from typing import Any, Callable, Iterable, Optional
 
+from chillastic_spark.locks import write_json
 from chillastic_spark.model import DEFAULT_NAMESPACE, ActionRef, validate_object_id
 
 MUTATOR_TYPES = ("data", "index", "template")  # mutators.js:127-131
@@ -292,10 +293,7 @@ class _Registry:
                 **self._orphan_sources,
                 **{f"{ns}/{id_}": s for (ns, id_), s in self._sources.items()},
             }
-            tmp = f"{self._path()}.{uuid.uuid4().hex[:8]}.tmp"
-            with open(tmp, "w") as f:
-                json.dump(data, f, indent=1)
-            os.replace(tmp, self._path())
+            write_json(self._path(), data, indent=1)
 
     # -- CRUD (api/mutators/index.js:5-8) --------------------------------
     def add(self, id: str, obj: Any, namespace: str = DEFAULT_NAMESPACE) -> None:

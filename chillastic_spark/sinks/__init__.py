@@ -22,7 +22,8 @@ layout (one full rewrite, once), mirroring how a Delta conversion works.
 
 Every mutation here runs under ``DocumentStore.mutation`` (one writer
 per index, crashed swaps healed first) and installs its rewrite with
-``sources.swap_dir`` — the store's single copy of that protocol.
+``DocumentStore.swap`` — ``locks.swap_dir``, the one install primitive
+every on-disk artifact shares.
 """
 from __future__ import annotations
 
@@ -40,7 +41,6 @@ from chillastic_spark.sources import (
     N_BUCKETS_DEFAULT,
     DocumentStore,
     bucket_expr,
-    swap_dir,
 )
 from chillastic_spark.sources.maintenance import _is_type_partitioned, file_stats
 
@@ -226,10 +226,9 @@ def _replace_buckets(
     """Rewrite ONLY the touched buckets. Untouched bucket dirs (the
     other N−|touched|) are never opened, listed, or rewritten; a
     touched bucket with no surviving rows is deleted."""
-    path = store.index_path(index)
     with store.staged_buckets(merged, index, n_buckets) as staged:
         for b in touched:
-            swap_dir(path, store.bucket_path(index, b), staged.get(b))
+            store.swap(index, store.bucket_path(index, b), staged.get(b))
 
 
 def _replace_index_bucketed(
@@ -257,7 +256,7 @@ def _replace_index_bucketed(
             # filtered listings make the leaked bytes invisible
             shutil.rmtree(new, ignore_errors=True)
             raise
-    swap_dir(target, target, new)
+    store.swap(index, target, new)
 
 
 def purge(
@@ -332,4 +331,4 @@ def _atomic_replace(store: DocumentStore, index: str, merged: DataFrame) -> None
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)
         raise
-    swap_dir(target, target, tmp)
+    store.swap(index, target, tmp)

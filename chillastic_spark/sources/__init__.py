@@ -34,7 +34,6 @@ import json
 import os
 import re
 import shutil
-import sys
 import uuid
 from typing import Any, Optional
 
@@ -42,7 +41,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from chillastic_spark.locks import FileLock, held_exclusive, test_pause
+from chillastic_spark.knobs import env_knob
+from chillastic_spark.locks import (
+    FileLock,
+    heal_swap,
+    heal_swaps,
+    held_exclusive,
+    reader_window,
+    swap_dir,
+    swap_leftovers,
+    swap_lock,
+    write_json,
+    writer_window,
+)
 
 ENVELOPE_SCHEMA = T.StructType(
     [
@@ -58,141 +69,38 @@ ENVELOPE_SCHEMA = T.StructType(
 NON_PORTABLE_SETTINGS = ("uuid", "creation_date", "provided_name")
 
 
-def _default_buckets() -> int:
-    """``CHILLASTIC_STORE_BUCKETS``, read once at import. A malformed
-    or out-of-range value must not break the import of every engine
-    entry point, nor pass silently until the first migration: warn on
-    stderr and fall back to 32. The range is the one ``bucket-NNNN``
-    dirs (and the stream glob's four digits) can name."""
-    raw = os.environ.get("CHILLASTIC_STORE_BUCKETS", "32")
-    try:
-        n = int(raw)
-    except ValueError:
-        n = 0
-    if 0 < n <= 9999:
-        return n
-    print(
-        f"chillastic: CHILLASTIC_STORE_BUCKETS={raw!r} is not an integer "
-        "in [1, 9999]; using 32",
-        file=sys.stderr,
-    )
-    return 32
+def _bucket_count(raw: str) -> int:
+    # the range ``bucket-NNNN`` dirs (and the stream glob's four
+    # digits) can name
+    n = int(raw)
+    if not 0 < n <= 9999:
+        raise ValueError(raw)
+    return n
 
 
-# hash-bucketed index layout (see module docstring)
-N_BUCKETS_DEFAULT = _default_buckets()
+# hash-bucketed index layout (see module docstring); read once at import
+N_BUCKETS_DEFAULT = env_knob(
+    "CHILLASTIC_STORE_BUCKETS", 32, _bucket_count, "an integer in [1, 9999]"
+)
 BUCKET_PREFIX = "bucket-"
 BUCKET_MARKER = ".n_buckets"
 
 
-@contextlib.contextmanager
-def store_swap_window(index_path: str):
-    """EXCLUSIVE flock on ``<index>.swap.lock`` held ONLY around a live
-    directory-rename window — the store twin of the search/vector
-    index swap protocol (r10; r9 verdict #4 applied to the store).
-
-    The long per-index mutation lock (``<index>.lock``) still
-    serializes whole mutations against each other; this second, narrow
-    lock exists for READERS: ``DocumentStore.read`` takes it SHARED
-    around its existence check + file listing, so a read can never
-    land between a swap's two renames (where it used to see the live
-    dir missing and silently serve an EMPTY or bucket-incomplete
-    frame) — and a reader blocks a writer only for the microseconds of
-    a rename, never for the minutes of the rewrite that precedes it.
-    Bucket-level swaps take the INDEX-level lock so one reader guard
-    covers both layouts. Re-entrant per thread via
-    ``locks.held_exclusive`` (recovery runs inside callers that
-    already hold the window)."""
-    lock_path = index_path + ".swap.lock"
-    if held_exclusive(lock_path):
-        yield
-        return
-    lk = FileLock(lock_path)
-    lk.acquire()
-    try:
-        yield
-    finally:
-        lk.release()
-
-
-def swap_dir(index_path: str, target: str, staged: Optional[str]) -> None:
-    """Install ``staged`` as ``target`` — the store's ONE live-dir
-    rename window, for a whole index (``target == index_path``) or one
-    of its buckets. ``rename(target→.old-)``, ``rename(staged→target)``,
-    ``rmtree(.old-)``, all under :func:`store_swap_window`. Either dir
-    may be absent: an absent ``target`` is a first write, an absent (or
-    None) ``staged`` deletes ``target`` (a bucket with no surviving
-    rows — absent == empty). A crash between the renames leaves the
-    only copy in ``.old-``; :func:`_heal_swaps` restores it."""
-    old = target + ".old-" + uuid.uuid4().hex[:8]
-    with store_swap_window(index_path):
-        if os.path.exists(target):
-            os.rename(target, old)
-        # torture-test crash window: live dir renamed away, staged dir
-        # not yet installed (tests/test_store_reader_race.py)
-        test_pause("store_mid_swap", os.path.dirname(index_path))
-        if staged is not None and os.path.isdir(staged):
-            os.rename(staged, target)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-
-
-def _recover_interrupted_swap(path: str) -> None:
-    """Heal :func:`swap_dir`'s crash window for one dir (an index or a
-    bucket). ``.old-`` siblings exist only because a swap — upsert,
-    its first migration, purge, or compaction — died inside the
-    window, and the live dir tells us WHERE it died:
-
-    * live path missing → between ``rename(target, old)`` and
-      ``rename(staged, target)``: the NEWEST ``.old-`` (by mtime — the
-      suffixes are random hex, not ordered) holds the current data;
-      restore it. Any older leftovers are from earlier crashes and are
-      superseded — remove them so a later crash can never resurrect a
-      stale snapshot.
-    * live path present → after ``rename(staged, target)`` but before
-      ``rmtree(old)``: every ``.old-`` is a superseded snapshot;
-      remove them all.
-
-    The interrupted rewrite's staged dir is left for inspection (the
-    scratch filters hide it); rerunning the mutation redoes it."""
-    base = os.path.basename(path)
-    parent = os.path.dirname(path) or "."
-    if not os.path.isdir(parent):
-        return
-    olds = [
-        os.path.join(parent, d)
-        for d in os.listdir(parent)
-        if d.startswith(base + ".old-")
-    ]
-    if not olds:
-        return
-    olds.sort(key=lambda p: os.path.getmtime(p))
-    if not os.path.exists(path):
-        os.rename(olds.pop(), path)
-    for stale in olds:
-        shutil.rmtree(stale)
-
-
-def _bucket_swap_leftovers(index_path: str) -> list:
-    """Live paths of the buckets a crashed :func:`swap_dir` left
-    ``bucket-NNNN.old-*`` copies of inside the index dir."""
-    if not os.path.isdir(index_path):
-        return []
-    return sorted({
-        os.path.join(index_path, d.split(".old-", 1)[0])
-        for d in os.listdir(index_path)
-        if ".old-" in d
-    })
-
-
 def _heal_swaps(index_path: str) -> None:
     """Heal BOTH swap levels of one index: the index dir itself, then
-    every bucket — keyed off the ``.old-`` LEFTOVERS, because
-    ``bucket_paths`` only lists existing dirs and a bucket whose live
-    dir vanished mid-swap would otherwise stay invisible forever."""
-    _recover_interrupted_swap(index_path)
-    for bucket in _bucket_swap_leftovers(index_path):
-        _recover_interrupted_swap(bucket)
+    every bucket with ``bucket-NNNN.old-`` leftovers."""
+    heal_swap(index_path)
+    heal_swaps(index_path)
+
+
+def _crashed_swap(index_path: str) -> bool:
+    """True when :func:`_heal_swaps` has something to heal: a bucket's
+    ``.old-`` leftover inside the index dir, or the index dir missing
+    beside its own ``.old-`` leftover."""
+    return bool(swap_leftovers(index_path)) or (
+        not os.path.isdir(index_path)
+        and index_path in swap_leftovers(os.path.dirname(index_path))
+    )
 
 
 def bucket_expr(n_buckets: int) -> F.Column:
@@ -296,10 +204,7 @@ class DocumentStore:
             return json.load(f)
 
     def _write_catalog(self, which: str, data: dict[str, Any]) -> None:
-        tmp = self._catalog_path(which) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(data, f, indent=1, sort_keys=True)
-        os.replace(tmp, self._catalog_path(which))
+        write_json(self._catalog_path(which), data, indent=1, sort_keys=True)
 
     # ------------------------------------------------- index configs
     def get_indices(self, pattern: str) -> list[dict]:
@@ -398,13 +303,10 @@ class DocumentStore:
         if not 0 < n <= 9999:
             raise StoreError(f"n_buckets must be in [1, 9999] (got {n})")
         os.makedirs(self.index_path(index), exist_ok=True)
-        p = os.path.join(self.index_path(index), BUCKET_MARKER)
-        # atomic (tmp + replace): a crash after open() truncates the
-        # marker, and an EMPTY marker bricks every later bucket_count()
-        # call on the index (int('') raises)
-        with open(p + ".tmp", "w") as f:
-            f.write(str(n))
-        os.replace(p + ".tmp", p)
+        # atomic: a crash mid-write must not truncate the marker — an
+        # EMPTY marker bricks every later bucket_count() call on the
+        # index (int('') raises)
+        write_json(os.path.join(self.index_path(index), BUCKET_MARKER), n)
 
     @staticmethod
     def stream_scratch_filter(df: DataFrame) -> DataFrame:
@@ -507,54 +409,38 @@ class DocumentStore:
         ``buckets`` prunes a bucketed index to the given hash buckets —
         the MERGE fast path reads only the touched 1/N-th of the index.
 
-        The existence check + file listing run under the SHARED side
-        of :func:`store_swap_window` (r10): a read can no longer land
-        between a live swap's two renames and silently serve an empty
-        or bucket-incomplete frame. A dir missing UNDER the lock with
-        ``.old-``/``.compact-`` siblings, or a ``bucket-NNNN.old-``
-        dir inside it, is a crashed swap — healed once (by entering
-        :meth:`mutation`) and retried, so a reader is never the caller
-        that has to know about writer crashes.
+        The existence check + file listing run in the index's
+        :func:`~chillastic_spark.locks.reader_window`: a read can never
+        land between a live swap's two renames and silently serve an
+        empty or bucket-incomplete frame, and a swap that crashed
+        mid-window (a ``.old-`` leftover of the index dir or of a
+        bucket) is healed first, so a reader is never the caller that
+        has to know about writer crashes.
         """
         path = self.index_path(index)
         if not os.path.isdir(os.path.dirname(path)):
             # bare root — no data dir to lock in (reads must not mkdir)
             return spark.createDataFrame([], ENVELOPE_SCHEMA)
+        lock = swap_lock(path)
         if (
             not os.path.isdir(path)
-            and not self._swap_leftovers(index)
-            and not os.path.exists(path + ".swap.lock")
+            and not os.path.exists(lock)
+            and not _crashed_swap(path)
         ):
             # genuinely never-built: no dir, no crashed-swap leftovers,
-            # and no swap lock file (every mutation path creates one, so
-            # a LIVE swap always leaves either the lock or a tagged dir
-            # visible) — return empty without materializing a lock file
+            # and no swap lock file (every mutation creates one) —
+            # return empty without materializing a lock file
             return spark.createDataFrame([], ENVELOPE_SCHEMA)
-        df = None
-        for attempt in (0, 1):
-            with self._read_snapshot(index):
-                # a bucket swap that died mid-window leaves its only
-                # copy in bucket-NNNN.old-*: heal before listing
-                crashed_bucket = attempt == 0 and bool(_bucket_swap_leftovers(path))
-                if os.path.isdir(path) and not crashed_bucket:
-                    if self.bucket_count(index) is not None:
-                        paths = self.bucket_paths(index, buckets)
-                        if not paths:
-                            return spark.createDataFrame([], ENVELOPE_SCHEMA)
-                        df = spark.read.schema(ENVELOPE_SCHEMA).parquet(*paths)
-                    else:
-                        df = spark.read.schema(ENVELOPE_SCHEMA).parquet(path)
-                    break
-            # absent under the lock: genuinely unbuilt, or a crashed
-            # swap (of the index or a bucket) whose leftovers hold the
-            # data — heal once, retry
-            if attempt == 0 and (crashed_bucket or self._swap_leftovers(index)):
-                with self.mutation(index):  # entering the guard heals
-                    pass
-                continue
-            return spark.createDataFrame([], ENVELOPE_SCHEMA)
-        if df is None:
-            return spark.createDataFrame([], ENVELOPE_SCHEMA)
+        with reader_window(lock, lambda: _crashed_swap(path), lambda: _heal_swaps(path)):
+            if not os.path.isdir(path):
+                paths = []
+            elif self.bucket_count(index) is None:
+                paths = [path]
+            else:
+                paths = self.bucket_paths(index, buckets)
+            if not paths:
+                return spark.createDataFrame([], ENVELOPE_SCHEMA)
+            df = spark.read.schema(ENVELOPE_SCHEMA).parquet(*paths)
         df = df.withColumn("_index", F.lit(index))
         if type is not None:
             df = df.filter(F.col("_type") == type)
@@ -569,45 +455,14 @@ class DocumentStore:
         return df
 
     @contextlib.contextmanager
-    def _read_snapshot(self, index: str):
-        """SHARED flock on the index's ``.swap.lock`` (see
-        :func:`store_swap_window`) — skipped when the calling thread
-        already holds it exclusively (a recovery mid-swap reading its
-        own work would self-deadlock: flock treats two fds of one
-        process as independent holders)."""
-        lock_path = self.index_path(index) + ".swap.lock"
-        if held_exclusive(lock_path):
-            yield
-            return
-        lk = FileLock(lock_path, shared=True)
-        lk.acquire()
-        try:
-            yield
-        finally:
-            lk.release()
-
-    def _swap_leftovers(self, index: str) -> bool:
-        """True when ``.old-``/``.compact-`` siblings of the index dir
-        exist — the signature of a swap that died mid-window."""
-        base = os.path.basename(self.index_path(index))
-        parent = os.path.dirname(self.index_path(index))
-        if not os.path.isdir(parent):
-            return False
-        return any(
-            d.startswith(base + ".old-") or d.startswith(base + ".compact-")
-            for d in os.listdir(parent)
-        )
-
-    @contextlib.contextmanager
     def mutation(self, index: str):
         """The ONE guard every change to an index runs under (upsert,
-        purge, ``write_documents``, compaction — and a read that finds
-        a crashed swap). The parquet store has no transaction log, so
+        purge, ``write_documents``, compaction). The parquet store has no transaction log, so
         one writer per index is enforced here: the EXCLUSIVE flock on
         ``<index>.lock`` serializes whole mutations — across processes
         and, since every acquisition opens its own fd, across threads of
         one process alike (locks.py). Once held, both swap levels are
-        healed under :func:`store_swap_window` BEFORE the caller reads
+        healed in the index's writer window BEFORE the caller reads
         anything: a bucket whose live dir died mid-swap reads as empty,
         and merging against "empty" would drop its pre-crash rows for
         good. Re-entrant per thread. Delta/Iceberg MERGE replaces all of
@@ -617,9 +472,20 @@ class DocumentStore:
             yield
             return
         with FileLock(path + ".lock"):
-            with store_swap_window(path):
-                _heal_swaps(path)
+            with writer_window(swap_lock(path), lambda: _heal_swaps(path)):
+                pass
             yield
+
+    def swap(self, index: str, target: str, staged: Optional[str]) -> None:
+        """Install ``staged`` as ``target`` — the whole index dir or one
+        of its buckets — with :func:`~chillastic_spark.locks.swap_dir`
+        under the index's swap lock. Caller holds :meth:`mutation`.
+
+        The swap lock is held only for the renames, so a reader blocks
+        a writer for microseconds, never for the rewrite before them;
+        bucket swaps take the INDEX-level lock, so one reader window
+        covers both layouts."""
+        swap_dir(swap_lock(self.index_path(index)), target, staged, "store_mid_swap")
 
     def read_sizes(
         self, spark: SparkSession, index: str, type: Optional[str] = None

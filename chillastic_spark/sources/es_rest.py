@@ -41,6 +41,7 @@ the TTL.
 from __future__ import annotations
 
 import json
+import math
 import os
 import ssl
 import time
@@ -52,6 +53,7 @@ import fnmatch
 
 from pyspark.sql import DataFrame, SparkSession
 
+from chillastic_spark.knobs import env_knob
 from chillastic_spark.sources import (
     ENVELOPE_SCHEMA,
     StoreError,
@@ -61,9 +63,24 @@ from chillastic_spark.sources import (
 from chillastic_spark.sources.elasticsearch import SCROLL_TTL, _range_body
 
 BULK_REJECTED = "es_rejected_execution_exception"
-DEFAULT_TIMEOUT = float(os.environ.get("CHILLASTIC_ES_TIMEOUT", "30"))
-# per-slice scroll fan-out; "auto" sizes off spark.defaultParallelism
-DEFAULT_SLICES = os.environ.get("CHILLASTIC_ES_SLICES", "auto")
+
+
+def _seconds(raw: str) -> float:
+    t = float(raw)
+    if not 0 < t < math.inf:
+        raise ValueError(raw)
+    return t
+
+
+DEFAULT_TIMEOUT = env_knob(
+    "CHILLASTIC_ES_TIMEOUT", 30.0, _seconds, "a positive number of seconds"
+)
+# per-slice scroll fan-out: an integer, or "auto" (sized off
+# spark.defaultParallelism)
+DEFAULT_SLICES = env_knob(
+    "CHILLASTIC_ES_SLICES", "auto",
+    lambda raw: raw if raw == "auto" else int(raw), 'an integer or "auto"',
+)
 WORKER_HEADER = "X-Chillastic-Worker"
 
 

@@ -21,7 +21,8 @@ import uuid
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from chillastic_spark.sources import ENVELOPE_SCHEMA, DocumentStore, swap_dir
+from chillastic_spark.locks import swap_pending
+from chillastic_spark.sources import ENVELOPE_SCHEMA, DocumentStore
 
 DEFAULT_TARGET_FILE_BYTES = 128 * 1024 * 1024
 _ENVELOPE_COLS = [f.name for f in ENVELOPE_SCHEMA.fields]
@@ -112,8 +113,8 @@ def compact_index(
         dirs = [path] if store.bucket_count(index) is None else store.bucket_paths(index)
         stats = [
             _compact_dir(
-                spark, path, d, target_file_bytes, min_files_to_compact,
-                sort_by, zorder_by,
+                spark, store, index, d, target_file_bytes,
+                min_files_to_compact, sort_by, zorder_by,
             )
             for d in dirs
         ]
@@ -133,7 +134,8 @@ def compact_index(
 
 def _compact_dir(
     spark: SparkSession,
-    index_path: str,
+    store: DocumentStore,
+    index: str,
     path: str,
     target_file_bytes: int,
     min_files_to_compact: int,
@@ -143,7 +145,7 @@ def _compact_dir(
     """Compact ONE parquet dataset — a flat index, or one bucket of a
     bucketed index (rows never cross buckets, so the bucket-scoped
     MERGE invariant survives) — on its own file stats, and swap the
-    rewrite in with :func:`swap_dir`."""
+    rewrite in with :meth:`DocumentStore.swap`."""
     before = file_stats(path, small_file_bytes=target_file_bytes // 4)
     n_out = max(1, math.ceil(before["total_bytes"] / target_file_bytes))
     relayout = sort_by is not None or zorder_by is not None
@@ -168,7 +170,7 @@ def _compact_dir(
         writer = writer.partitionBy("_type")
     tmp = path + ".compact-" + uuid.uuid4().hex[:8]
     writer.parquet(tmp)
-    swap_dir(index_path, path, tmp)
+    store.swap(index, path, tmp)
     return {
         "before": before,
         "after": file_stats(path, small_file_bytes=target_file_bytes // 4),
@@ -288,9 +290,9 @@ def index_health(index_dir: str) -> dict:
     """Dashboard snapshot of ONE materialized-index dir (vector LSH /
     vector IVF / inverted text — whichever artifacts are present):
     persisted metas (IVF centroid matrix elided — it is the model, not
-    a health stat), file shape per artifact, and whether a swap
-    journal is pending (a crash leftover the next reader/writer will
-    roll forward). Pure metadata walk, no Spark job — the GET
+    a health stat), file shape per artifact, and whether a crashed swap
+    is pending (``locks.swap_pending`` — a leftover the next reader or
+    writer heals). Pure metadata walk, no Spark job — the GET
     /indexes/health body."""
     import json as _json
 
@@ -322,10 +324,7 @@ def index_health(index_dir: str) -> dict:
                     os.path.join(index_dir, "postings")
                 ),
             }
-    out["pending_swap_journal"] = any(
-        os.path.exists(os.path.join(index_dir, j))
-        for j in ("swap-journal.json", "compact-journal.json")
-    )
+    out["pending_swap_journal"] = swap_pending(index_dir)
     return out
 
 

@@ -16,147 +16,94 @@ the corpus — the point of an inverted index. Scoring mirrors
 queries/search.py:bm25_topk exactly (same rounding), so the served
 result is bit-identical to the scan-time query.
 
-Concurrency contract: mutations (build/update/compact) are SINGLE-
-WRITER maintenance operations serialized by the writer flock; query
-functions take a SHARED flock on the same lock file for their journal
-check + stats read + parquet file listing (``_reader_snapshot``, r9
-verdict #4), so a read can never interleave with a live swap's
-renames — it sees the whole old index or the whole new one, never new
-postings paired with old term_stats/stats.json (silently wrong BM25)
-and never a half-renamed dir misread as empty. The returned
-DataFrames stay LAZY (keeping the In-filter pushdown visible and
-composable): an action that runs AFTER a later swap completes can
-still fail loudly with file-not-found (the swap renames the postings
-dir) — loud-and-retriable, never torn. Multiprocess proof:
-tests/test_index_reader_race.py (reader vs pause-injected mid-swap
-writer).
+Concurrency contract: the index rides the ONE swap protocol in
+``chillastic_spark.locks``. Mutations (build/update) are SINGLE-WRITER
+maintenance operations in the writer window (EXCLUSIVE flock on the
+index dir's ``locks.swap_lock``); query functions list files in the reader
+window (SHARED side of the same lock) for their journal check + stats
+read + parquet file listing, so a read can never interleave with a live
+swap's renames — it sees the whole old index or the whole new one,
+never new postings paired with old term_stats/stats.json (silently
+wrong BM25) and never a half-renamed dir misread as empty. Both windows
+are re-entrant for a thread that already holds the writer. Because one
+update changes three artifacts together, the swap is journaled
+(``locks.SWAP_JOURNAL``) and a crash rolls FORWARD; each dir is still
+installed with ``locks.swap_dir``. The returned DataFrames stay LAZY
+(keeping the In-filter pushdown visible and composable): an action
+that runs AFTER a later swap completes can still fail loudly with
+file-not-found (the swap renames the postings dir) — loud-and-retriable,
+never torn. Multiprocess proof: tests/test_index_reader_race.py (reader
+vs pause-injected mid-swap writer).
 """
 from __future__ import annotations
 
 import json
 import os
-import threading
-from contextlib import contextmanager
+import shutil
+import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chillastic_spark import functions as CF
+from chillastic_spark.locks import (
+    SWAP_JOURNAL,
+    heal_swaps,
+    reader_window,
+    swap_dir,
+    swap_lock,
+    test_pause,
+    write_json,
+    writer_window,
+)
 
 DEFAULT_POSTING_FILES = 8
 
-_SI_LOCKS: dict[str, threading.Lock] = {}
-_SI_GUARD = threading.Lock()
+
+def _lock(index_dir: str) -> str:
+    return swap_lock(index_dir, inside=True)
 
 
-def _si_thread_lock(index_dir: str) -> threading.Lock:
-    with _SI_GUARD:
-        return _SI_LOCKS.setdefault(os.path.abspath(index_dir), threading.Lock())
+def _journal(index_dir: str) -> str:
+    return os.path.join(index_dir, SWAP_JOURNAL)
 
 
-@contextmanager
-def _writer_lock(index_dir: str):
-    """In-process thread lock + cross-process flock (the sinks'/
-    maintenance convention) around every artifact mutation. Without it
-    a reader's _recover_swap races a LIVE update's renames: the reader
-    cannot distinguish a crashed swap from an in-flight one, installs
-    the tmp dirs itself, and the updater's own renames then strand the
-    only postings copy in a backup dir. Under the lock, a reader that
-    sees a journal simply waits for the updater to finish (journal
-    gone → no-op recovery)."""
-    from chillastic_spark.locks import FileLock
-
-    os.makedirs(index_dir, exist_ok=True)
-    with _si_thread_lock(index_dir), FileLock(
-        os.path.join(index_dir, ".swap.lock")
-    ):
-        yield
-
-
-def _recover_swap(index_dir: str) -> None:
-    """Roll FORWARD an interrupted update swap (lock-guarded). The
-    lockless fast path only skips when no journal exists; with one
-    present, the lock serializes against a possibly-live update and
-    the journal is re-checked inside."""
-    if not os.path.exists(os.path.join(index_dir, "swap-journal.json")):
-        return
-    with _writer_lock(index_dir):
-        _recover_swap_locked(index_dir)
-
-
-@contextmanager
-def _reader_snapshot(index_dir: str):
-    """Shared-lock read window (r9 verdict #4): a serving read performs
-    its journal check, stats.json read, and parquet FILE LISTING inside
-    one ``LOCK_SH`` window on the same ``.swap.lock`` every writer
-    holds ``LOCK_EX`` on. Holding SH proves no swap is mid-flight — a
-    live updater owns EX from before the journal write until after the
-    journal removal — so a journal observed under SH can only be a
-    CRASH leftover: the guard releases, rolls it forward (under EX),
-    and retries. Without the window a reader racing a live swap could
-    pair NEW postings with OLD term_stats/stats.json (silently wrong
-    BM25 — the exact tear the journal exists to prevent) or misread
-    the between-renames state as a missing index. Readers share the
-    window with each other; a writer waits out at most the listing
-    (milliseconds), not the query."""
-    from chillastic_spark.locks import FileLock
-
-    jpath = os.path.join(index_dir, "swap-journal.json")
-    os.makedirs(index_dir, exist_ok=True)
-    for attempt in range(4):
-        lock = FileLock(os.path.join(index_dir, ".swap.lock"), shared=True)
-        lock.acquire()
-        if not os.path.exists(jpath):
-            try:
-                yield
-            finally:
-                lock.release()
-            return
-        lock.release()
-        _recover_swap(index_dir)
-    raise RuntimeError(
-        f"{index_dir}: swap journal persists after repeated recovery — "
-        "the index artifacts need manual inspection"
+def _serving(index_dir: str):
+    """The index's reader window: a journal seen under the shared lock
+    can only be a crash leftover (a live swap holds the exclusive side
+    from before the journal write until after its removal), so it is
+    rolled forward and the read retries."""
+    return reader_window(
+        _lock(index_dir),
+        lambda: os.path.exists(_journal(index_dir)),
+        lambda: _recover_swap_locked(index_dir),
     )
 
 
 def _recover_swap_locked(index_dir: str) -> None:
-    """The recovery body — caller MUST hold _writer_lock.
-    update_inverted_index replaces postings, term_stats, and stats.json
-    in three steps; a crash between them would otherwise leave postings
-    that disagree with term df / corpus stats — silently wrong BM25
-    scores with no error. The journal (written before the first rename,
-    removed after the last write) records the tmp dirs and the
-    already-computed stats, so recovery completes whichever steps
-    remain, idempotently. Every index entry point runs this before
-    touching the artifacts."""
-    import shutil
-
-    jpath = os.path.join(index_dir, "swap-journal.json")
+    """Roll an interrupted swap FORWARD — caller holds the writer
+    window. update_inverted_index replaces postings, term_stats, and
+    stats.json in three steps; a crash between them would otherwise
+    leave postings that disagree with term df / corpus stats — silently
+    wrong BM25 scores with no error. The journal (written before the
+    first rename, removed after the last write) records the tmp dirs
+    and the already-computed stats, so recovery completes whichever
+    steps remain, idempotently: a dir whose tmp still exists is
+    installed with ``swap_dir``, and every ``.old-`` leftover of the
+    interrupted run is healed away."""
+    jpath = _journal(index_dir)
     if not os.path.exists(jpath):
         return
     with open(jpath) as f:
         journal = json.load(f)
     for live_name, tmp_key in (("postings", "post_tmp"), ("term_stats", "ts_tmp")):
-        live = os.path.join(index_dir, live_name)
-        tmp = journal[tmp_key]
-        if os.path.exists(tmp):  # this step never completed
-            if os.path.exists(live):
-                bak = live + ".old-recover"
-                if os.path.exists(bak):
-                    shutil.rmtree(bak)
-                os.rename(live, bak)
-            os.rename(tmp, live)
-        # superseded backups from the interrupted run
-        parent = os.path.dirname(live)
-        base = os.path.basename(live)
-        for d in os.listdir(parent):
-            if d.startswith(base + ".old-"):
-                shutil.rmtree(os.path.join(parent, d))
-    tmp_stats = os.path.join(index_dir, "stats.json.tmp")
-    with open(tmp_stats, "w") as f:
-        json.dump(journal["stats"], f)
-    os.replace(tmp_stats, os.path.join(index_dir, "stats.json"))
+        if os.path.exists(journal[tmp_key]):  # this step never completed
+            swap_dir(
+                _lock(index_dir), os.path.join(index_dir, live_name),
+                journal[tmp_key],
+            )
+    heal_swaps(index_dir)
+    _write_stats(index_dir, journal["stats"])
     os.remove(jpath)
 
 
@@ -206,25 +153,22 @@ def _read_stats(index_dir: str) -> dict:
 
 
 def _write_stats(index_dir: str, stats: dict) -> None:
-    tmp = os.path.join(index_dir, "stats.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(stats, f)
-    os.replace(tmp, os.path.join(index_dir, "stats.json"))
+    write_json(os.path.join(index_dir, "stats.json"), stats)
 
 
 def _discard_stale_swap(index_dir: str) -> None:
     """A full rebuild supersedes any crashed update: drop the stale
     journal and its tmp dirs (rolling them FORWARD after the rebuild
     would silently replace the fresh artifacts with the crashed
-    update's). Caller must hold _writer_lock."""
-    import shutil
-
-    jpath = os.path.join(index_dir, "swap-journal.json")
+    update's), and heal its ``.old-`` leftovers. Caller holds the
+    writer window."""
+    jpath = _journal(index_dir)
     if os.path.exists(jpath):
         with open(jpath) as f:
             journal = json.load(f)
         for key in ("post_tmp", "ts_tmp"):
             shutil.rmtree(journal.get(key, ""), ignore_errors=True)
+        heal_swaps(index_dir)
         os.remove(jpath)
 
 
@@ -256,24 +200,21 @@ def build_inverted_index(
     id_col: str = "doc_id",
     n_files: int = DEFAULT_POSTING_FILES,
 ) -> dict:
-    """Tokenise once, write postings/term_stats/corpus stats (under the
-    writer lock; a stale crashed-update journal is discarded, not
+    """Tokenise once, write postings/term_stats/corpus stats (in the
+    writer window; a stale crashed-update journal is discarded, not
     rolled forward over the rebuild).
 
     Crash-atomic like the update path: artifacts land in tmp dirs, the
     swap is journaled, and the renames roll forward from any crash
-    window (_recover_swap). The old in-place overwrites could crash
+    window (_recover_swap_locked). The old in-place overwrites could crash
     between the three writes and leave fresh postings beside the
     PREVIOUS build's term_stats/stats — torn silently, because without
     a journal no entry point can even detect it. Input hygiene matches
     update_inverted_index (_clean_batch)."""
-    import uuid
-
     from chillastic_spark.persist import batch_scope
     from chillastic_spark.persist import materialize as _pin
 
-    with _writer_lock(index_dir):
-        _discard_stale_swap(index_dir)
+    with writer_window(_lock(index_dir), lambda: _discard_stale_swap(index_dir)):
         src = _clean_batch(docs, id_col, text_col)
         toks = src.select(
             "doc_id", CF.words("__text").alias("w")
@@ -306,37 +247,20 @@ def build_inverted_index(
 
 
 def _swap_in(index_dir: str, post_tmp: str, ts_tmp: str, stats: dict) -> None:
-    """Journal → rename postings → rename term_stats → stats.json →
-    journal removed. ONE definition of the swap protocol shared by
-    build and update, matching _recover_swap_locked's roll-forward
-    exactly. Caller must hold _writer_lock. Handles the first-build
-    case (no live dirs yet) the same way recovery does."""
-    import shutil
-    import uuid
-
-    jpath = os.path.join(index_dir, "swap-journal.json")
-    jtmp = jpath + ".tmp"
-    with open(jtmp, "w") as f:
-        json.dump({"post_tmp": post_tmp, "ts_tmp": ts_tmp, "stats": stats}, f)
-    os.replace(jtmp, jpath)
-    for live_name, tmp in (("postings", post_tmp), ("term_stats", ts_tmp)):
-        if live_name == "term_stats":
-            # torture-test crash window: postings installed, term_stats
-            # and stats.json not yet — the silently-wrong-BM25 tear the
-            # journal roll-forward exists for
-            from chillastic_spark.locks import test_pause
-
-            test_pause("si_mid_swap", index_dir)
-        live = os.path.join(index_dir, live_name)
-        if os.path.exists(live):
-            bak = live + ".old-" + uuid.uuid4().hex[:8]
-            os.rename(live, bak)
-            os.rename(tmp, live)
-            shutil.rmtree(bak)
-        else:
-            os.rename(tmp, live)
+    """Journal → install postings → install term_stats → stats.json →
+    journal removed. ONE definition of the swap shared by build and
+    update, matching _recover_swap_locked's roll-forward exactly; each
+    dir goes in through ``swap_dir`` (a first build has no live dirs
+    yet). Caller holds the writer window."""
+    write_json(_journal(index_dir), {"post_tmp": post_tmp, "ts_tmp": ts_tmp, "stats": stats})
+    swap_dir(_lock(index_dir), os.path.join(index_dir, "postings"), post_tmp)
+    # torture-test crash window: postings installed, term_stats and
+    # stats.json not yet — the silently-wrong-BM25 tear the journal
+    # roll-forward exists for
+    test_pause("si_mid_swap", index_dir)
+    swap_dir(_lock(index_dir), os.path.join(index_dir, "term_stats"), ts_tmp)
     _write_stats(index_dir, stats)
-    os.remove(jpath)
+    os.remove(_journal(index_dir))
 
 
 def bm25_search_index(
@@ -350,9 +274,9 @@ def bm25_search_index(
     """Serve a BM25 top-k from the prebuilt index. Identical math and
     rounding to queries/search.py:bm25_topk — the golden equivalence is
     test-pinned. Stats + both artifact listings happen inside ONE
-    ``_reader_snapshot`` window, so the three can never come from
-    different swap generations."""
-    with _reader_snapshot(index_dir):
+    reader window, so the three can never come from different swap
+    generations."""
+    with _serving(index_dir):
         with open(os.path.join(index_dir, "stats.json")) as f:
             stats = json.load(f)
         n_docs, avgdl = stats["n_docs"], stats["avgdl"]
@@ -417,14 +341,11 @@ def update_inverted_index(
     Cost is |old postings| + |batch| — one union + the same sorted
     rewrite as build; at scale the rewrite is the same amortised
     OPTIMIZE-style pass compaction already does. The whole mutation
-    runs under the writer lock (thread + flock), so concurrent
-    updates, rebuilds, and reader-triggered recovery serialize instead
-    of racing the renames. Re-adding an existing doc_id is rejected
-    (the store's upsert handles mutation; an index rebuild covers it)."""
-    import uuid
-
-    with _writer_lock(index_dir):
-        _recover_swap_locked(index_dir)
+    runs in the writer window, so concurrent updates, rebuilds, and
+    reader-triggered recovery serialize instead of racing the renames.
+    Re-adding an existing doc_id is rejected (the store's upsert
+    handles mutation; an index rebuild covers it)."""
+    with writer_window(_lock(index_dir), lambda: _recover_swap_locked(index_dir)):
         try:
             old_stats = _read_stats(index_dir)
         except FileNotFoundError:
@@ -516,7 +437,7 @@ def wildcard_search_index(
     sorted-term layout turns it into a contiguous range of files
     (footer min/max skipping — the reason build sorts by term). Per-doc
     hit counts + matched terms, top-k by hits."""
-    with _reader_snapshot(index_dir):
+    with _serving(index_dir):
         p = spark.read.parquet(os.path.join(index_dir, "postings")).filter(
             F.col("term").startswith(prefix)
         )
@@ -539,7 +460,7 @@ def suggest_terms(
     frequency) — no postings touched. Collects INSIDE the reader
     window: the result is end-to-end consistent, not just listed
     consistently."""
-    with _reader_snapshot(index_dir):
+    with _serving(index_dir):
         ts = spark.read.parquet(os.path.join(index_dir, "term_stats"))
         rows = (
             ts.filter(F.col("term").startswith(prefix))
@@ -645,12 +566,12 @@ def phrase_search_index(
     Adjacency for an m-term phrase: p ∈ positions(t0) such that
     p+i ∈ positions(ti) for all i — folded as iterative array
     intersects of shifted position lists."""
-    _recover_swap(index_dir)
     if len(phrase) < 2:
         raise ValueError("phrase needs at least 2 terms")
-    posts = spark.read.parquet(os.path.join(index_dir, "postings")).filter(
-        F.col("term").isin(phrase)
-    )
+    with _serving(index_dir):
+        posts = spark.read.parquet(os.path.join(index_dir, "postings")).filter(
+            F.col("term").isin(phrase)
+        )
     parts = [
         posts.filter(F.col("term") == t).select(
             "doc_id", F.col("positions").alias(f"p{i}")

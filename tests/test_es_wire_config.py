@@ -421,3 +421,49 @@ def test_list_data_indices_pushes_es_safe_patterns_server_side():
         assert store.list_data_indices("[ab]*1") == ["alpha1", "beta1"]
     finally:
         es.stop()
+
+
+def _es_knobs_with(**env_vars):
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "from chillastic_spark.sources import es_rest as e\n"
+        "n = e._resolve_slices(e.Wire('http://localhost:1'), None, None)\n"
+        "print(e.DEFAULT_TIMEOUT, e.DEFAULT_SLICES, n)\n"
+    )
+    return subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo, env=dict(os.environ, **env_vars),
+        capture_output=True, text=True, timeout=120,
+    )
+
+
+@pytest.mark.parametrize(
+    "name,value",
+    [
+        ("CHILLASTIC_ES_TIMEOUT", "soon"),
+        ("CHILLASTIC_ES_TIMEOUT", "-5"),
+        ("CHILLASTIC_ES_TIMEOUT", "inf"),
+        ("CHILLASTIC_ES_SLICES", "many"),
+        ("CHILLASTIC_ES_SLICES", "2.5"),
+    ],
+)
+def test_malformed_es_env_knob_falls_back_with_a_warning(name, value):
+    """A malformed ES knob must neither break ``import es_rest`` (the
+    timeout is parsed at import) nor raise on the first scan (the
+    slices knob used to blow up inside ``_resolve_slices``): both fall
+    back to their defaults, 30 s and ``auto``, with a stderr warning."""
+    p = _es_knobs_with(**{name: value})
+    assert p.returncode == 0, p.stderr
+    assert p.stdout.split() == ["30.0", "auto", "1"]
+    assert name in p.stderr and repr(value) in p.stderr
+
+
+def test_valid_es_env_knobs_are_used_silently():
+    p = _es_knobs_with(CHILLASTIC_ES_TIMEOUT="7.5", CHILLASTIC_ES_SLICES="1")
+    assert p.returncode == 0, p.stderr
+    assert p.stdout.split() == ["7.5", "1", "1"]
+    assert "CHILLASTIC_ES" not in p.stderr

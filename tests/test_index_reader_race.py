@@ -2,7 +2,7 @@
 (r9 verdict #4): r9 proved writer-writer serialization and SIGKILL
 recovery (test_index_writer_race.py); the remaining race was a READER
 querying during the live two-rename swap windows — before the
-_reader_snapshot shared-lock guard, a reader landing between
+shared-lock reader window (locks.reader_window), a reader landing between
 compact_vector_index's renames saw the data dir missing and misread it
 as a BOOTSTRAP-EMPTY index (silently empty results), and a reader
 landing inside _swap_in's window could pair NEW postings with OLD
@@ -14,9 +14,10 @@ Contract proven here, each against REAL OS processes:
    window (holding the exclusive flock) BLOCKS on the shared flock —
    it does not return empty, partial, or torn results;
 2. once the writer dies mid-swap (SIGKILL — the kernel drops its
-   flock), the blocked reader proceeds, rolls the journaled swap
-   FORWARD, and serves results equal to a clean rebuild: old-or-new,
-   never torn.
+   flock), the blocked reader proceeds, heals the crashed swap (the
+   vector index back to its ``data.old-`` copy, the inverted index
+   FORWARD from its journal), and serves results equal to a clean
+   rebuild: old-or-new, never torn.
 
 The crash windows are injected with locks.test_pause
 (CHILLASTIC_TEST_PAUSE) exactly like the writer-race suite, so the
@@ -160,8 +161,8 @@ def test_vector_reader_blocks_on_live_swap_then_serves_consistent(
     reader = None
     try:
         _wait_file(os.path.join(idx, ".paused-vi_mid_swap"))
-        # mid-swap: journal present, live data dir renamed away, EX held
-        assert os.path.exists(os.path.join(idx, "compact-journal.json"))
+        # mid-swap: live data dir renamed away to data.old-, EX held
+        assert [d for d in os.listdir(idx) if d.startswith("data.old-")]
         assert not os.path.exists(os.path.join(idx, "data"))
 
         reader = _spawn(
@@ -182,7 +183,7 @@ def test_vector_reader_blocks_on_live_swap_then_serves_consistent(
         victim.kill()  # SIGKILL inside the window; kernel drops the flock
         victim.wait(timeout=60)
 
-    # the blocked reader now proceeds: rolls the journal forward and
+    # the blocked reader now proceeds: heals back to data.old- and
     # serves EXACTLY the pre-compaction results (old-or-new — and for
     # compaction old == new by definition)
     try:
@@ -194,7 +195,8 @@ def test_vector_reader_blocks_on_live_swap_then_serves_consistent(
     with open(out) as f:
         got = [tuple(r) for r in json.load(f)]
     assert got == [tuple(r) for r in want]
-    assert not os.path.exists(os.path.join(idx, "compact-journal.json"))
+    assert not [d for d in os.listdir(idx) if d.startswith("data.old-")]
+    assert os.path.isdir(os.path.join(idx, "data"))
 
 
 def _docs_a(spark):

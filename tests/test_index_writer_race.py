@@ -8,10 +8,11 @@ Three contracts, each against a REAL second process:
 1. two writers racing ``update_vector_index`` SERIALIZE on the flock
    (index merges block rather than fail — locks.py's documented
    split); the merged index equals a full rebuild of the union;
-2. a compactor SIGKILLed BETWEEN the two swap renames (journal
-   committed, live dir renamed away) leaves a lock that dies with the
-   process and a journal the next entry point rolls FORWARD: serving
-   results equal a full rebuild, nothing lost;
+2. a compactor SIGKILLed BETWEEN the two swap renames (live dir
+   renamed away to ``data.old-``) leaves a lock that dies with the
+   process and a leftover the next entry point heals BACK to: serving
+   results equal a full rebuild, nothing lost, and the orphaned
+   compacted ``data.new-`` dir is never installed;
 3. same for the inverted index: an updater killed after the postings
    rename but before term_stats/stats (the silently-wrong-BM25 tear)
    recovers to exactly the full-rebuild scores.
@@ -177,17 +178,17 @@ def test_compactor_sigkill_mid_swap_recovers_to_rebuild(spark, tmp_path):
     victim = _spawn(COMPACT_WORKER.format(repo=REPO, idx=idx))
     try:
         _wait_marker(os.path.join(idx, ".paused-vi_mid_swap"))
-        # mid-merge: journal present, live data renamed away, flock held.
-        # The loser fails fast while the merge is in flight:
+        # mid-swap: live data renamed away to data.old-, flock held.
+        # The loser fails fast while the swap is in flight:
         with pytest.raises(LockHeld):
             FileLock(os.path.join(idx, ".swap.lock")).acquire(blocking=False)
-        assert os.path.exists(os.path.join(idx, "compact-journal.json"))
+        assert _leftovers(idx, "data.old-")
         assert not os.path.exists(os.path.join(idx, "data"))
     finally:
         victim.kill()  # SIGKILL inside the swap window; kernel drops flock
         victim.wait(timeout=60)
 
-    # reader-path recovery rolls the journaled swap FORWARD: index
+    # reader-path recovery heals BACK to the pre-compaction copy: index
     # readable and serving equals a clean rebuild of the same rows
     union = _base_vectors(spark).unionByName(extra)
     ref = str(tmp_path / "vi-rebuild")
@@ -199,7 +200,8 @@ def test_compactor_sigkill_mid_swap_recovers_to_rebuild(spark, tmp_path):
     bvi(union, ref, planes=3, seed="race")
     q = _queries(spark)
     assert _serve(spark, idx, q) == _serve(spark, ref, q)
-    assert not os.path.exists(os.path.join(idx, "compact-journal.json"))
+    assert not _leftovers(idx, "data.old-")
+    assert _leftovers(idx, "data.new-")  # the orphan was never installed
     assert _meta(idx)["n_vectors"] == 230
 
     # and the index keeps accepting writes after the crash
@@ -207,6 +209,10 @@ def test_compactor_sigkill_mid_swap_recovers_to_rebuild(spark, tmp_path):
         [(800, [1.0, 1.0, 1.0, 1.0])], "vec_id long, embedding array<double>"
     )
     assert update_vector_index(more, idx)["n_vectors"] == 231
+
+
+def _leftovers(idx, prefix):
+    return [d for d in os.listdir(idx) if d.startswith(prefix)]
 
 
 def _docs_a(spark):

@@ -211,7 +211,7 @@ def test_swap_recovery_restores_newest_and_removes_stale(spark, tmp_path):
     import os
     import time
 
-    from chillastic_spark.sources import _recover_interrupted_swap
+    from chillastic_spark.locks import heal_swap
 
     root = tmp_path / "r"
     root.mkdir()
@@ -227,13 +227,13 @@ def test_swap_recovery_restores_newest_and_removes_stale(spark, tmp_path):
     time.sleep(0.02)
     newest = mk("idx.old-zzzz", "current")
     os.utime(stale, (1, 1))  # force older mtime regardless of suffix
-    _recover_interrupted_swap(live)
+    heal_swap(live)
     assert os.path.exists(os.path.join(live, "current"))  # newest won
     assert not os.path.exists(stale) and not os.path.exists(newest)
 
     # live present → leftovers are superseded snapshots, removed
     leftover = mk("idx.old-ffff", "old")
-    _recover_interrupted_swap(live)
+    heal_swap(live)
     assert os.path.exists(os.path.join(live, "current"))
     assert not os.path.exists(leftover)
 

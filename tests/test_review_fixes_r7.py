@@ -37,17 +37,15 @@ def _queries(e):
     return e.limit(3).selectExpr("vec_id as query_id", "embedding")
 
 
-def test_compact_recovery_is_journal_tag_keyed(spark, tmp_path):
+def test_compact_recovery_never_installs_an_orphan(spark, tmp_path):
     """ADVICE r6 (medium): recovery installed the lexicographically-last
-    ``data.new-*`` instead of the journaled tag. With an orphan
-    ``data.new-zzzz`` (crash before ITS journal write — stale, missing
-    buckets) and a journaled crash of tag ``aaaa`` between the two
-    renames, the buggy recovery installed the stale zzzz dir and
-    rmtree'd the genuine one — silently losing vectors."""
+    ``data.new-*`` — with an orphan ``data.new-zzzz`` (a stale copy,
+    missing buckets) beside a crash between the two renames of a
+    genuine compaction, it installed the stale dir and silently lost
+    vectors. Recovery now heals BACK to the swap's ``data.old-`` copy
+    and never installs any ``.new-`` dir."""
     from chillastic_spark.sources.vector_index import (
-        COMPACT_JOURNAL,
         DATA,
-        _recover_compact,
         ann_query_index,
         build_vector_index,
         compact_vector_index,
@@ -64,9 +62,9 @@ def test_compact_recovery_is_journal_tag_keyed(spark, tmp_path):
     }
     assert want
 
-    # orphan from an EARLIER crash before its journal write: a stale
-    # copy with half its bucket partitions deleted; tag sorts AFTER the
-    # genuine swap's tag so the old news[-1] pick would choose it
+    # orphan from an EARLIER crash: a stale copy with half its bucket
+    # partitions deleted; its tag sorts AFTER the genuine swap's tag so
+    # the old news[-1] pick would choose it
     shutil.copytree(data, data + ".new-zzzz")
     buckets = sorted(
         d for d in os.listdir(data + ".new-zzzz") if d.startswith("bucket=")
@@ -76,27 +74,25 @@ def test_compact_recovery_is_journal_tag_keyed(spark, tmp_path):
 
     # the genuine swap, crashed between rename data->old and new->data
     shutil.copytree(data, data + ".new-aaaa")
-    with open(os.path.join(idx, COMPACT_JOURNAL), "w") as f:
-        json.dump({"tag": "aaaa"}, f)
     os.rename(data, data + ".old-aaaa")
     assert not os.path.exists(data)
 
-    _recover_compact(idx)
-    assert os.path.exists(data)
-    # the journaled dirs are consumed; the orphan is NOT installed
-    assert not os.path.exists(data + ".new-aaaa")
-    assert not os.path.exists(data + ".old-aaaa")
-    assert os.path.exists(data + ".new-zzzz")  # untouched by recovery
+    # a serving read heals: the .old- copy is back, neither orphan is
+    # installed, and no vector is lost to the stale one
     got = {
         (r["query_id"], r["neighbor_id"], r["cos"])
         for r in ann_query_index(spark, idx, _queries(e), k=5).collect()
     }
-    assert got == want  # no vectors lost to the stale orphan
+    assert got == want
+    assert os.path.exists(data)
+    assert not os.path.exists(data + ".old-aaaa")
+    assert os.path.exists(data + ".new-zzzz")  # untouched by recovery
 
-    # a fresh compaction cleans the orphan under the writer lock and
+    # a fresh compaction cleans the orphans in the writer window and
     # round-trips results
     compact_vector_index(spark, idx)
     assert not os.path.exists(data + ".new-zzzz")
+    assert not os.path.exists(data + ".new-aaaa")
     got2 = {
         (r["query_id"], r["neighbor_id"], r["cos"])
         for r in ann_query_index(spark, idx, _queries(e), k=5).collect()

@@ -2,7 +2,7 @@
 
 Every writer — upsert (its first migration, a bucketed merge, a merge
 into a ``_type=``-partitioned index), purge and compaction — installs
-its rewrite through ``sources.swap_dir`` under ``DocumentStore.mutation``.
+its rewrite through ``locks.swap_dir`` under ``DocumentStore.mutation``.
 These tests pin what that shared protocol promises:
 
 1. a writer that dies between ``swap_dir``'s two renames leaves the
@@ -23,7 +23,7 @@ import threading
 
 import pytest
 
-import chillastic_spark.sources as sources
+import chillastic_spark.locks as locks
 from chillastic_spark.sinks import purge, upsert
 from chillastic_spark.sources import DocumentStore
 from chillastic_spark.sources.maintenance import compact_index
@@ -138,7 +138,7 @@ def test_crash_between_swap_renames_heals_to_pre_crash_rows(
         raise _SwapCrash(point)
 
     with monkeypatch.context() as m:
-        m.setattr(sources, "test_pause", crash)
+        m.setattr(locks, "test_pause", crash)
         with pytest.raises(_SwapCrash, match="store_mid_swap"):
             writer(spark, store)
 

@@ -295,27 +295,17 @@ def test_update_after_empty_build_bootstraps(spark, tmp_path):
     assert ann_query_index(spark, idx, q, k=3).count() > 0
 
 
-def test_compact_crash_recovery_rolls_forward(spark, tmp_path):
+def test_compact_crash_recovery_heals_to_pre_compaction_copy(spark, tmp_path):
     """Review findings (r5 + r6): a crash between the two swap renames
     left NO data dir with nothing to heal it, and a lockless recovery
-    raced a live compactor. The swap is now JOURNAL-keyed: the journal
-    is committed after the compacted dir is complete and removed after
-    the swap, so every simulated crash window below carries one —
-    and recovery without a journal is deliberately a no-op (that state
-    means a compactor is live or the index is virgin)."""
-    import json as _json
+    raced a live compactor. Compaction now installs with
+    ``locks.swap_dir`` in the writer window: every crash window leaves
+    a ``data.old-`` leftover that any entry point heals — back to the
+    pre-compaction copy when the live dir is missing (compaction never
+    changes rows), or away when the install already happened."""
     import shutil
 
-    from chillastic_spark.sources.vector_index import (
-        COMPACT_JOURNAL,
-        DATA,
-        _recover_compact,
-        compact_vector_index,
-    )
-
-    def _journal(tag):
-        with open(os.path.join(idx, COMPACT_JOURNAL), "w") as f:
-            _json.dump({"tag": tag}, f)
+    from chillastic_spark.sources.vector_index import DATA, compact_vector_index
 
     e = load(spark, SF, "embeddings").limit(200)
     idx = str(tmp_path / "vidx")
@@ -326,27 +316,23 @@ def test_compact_crash_recovery_rolls_forward(spark, tmp_path):
     }
     data = os.path.join(idx, DATA)
 
-    # window 1: compacted dir fully written, journal committed, data
-    # renamed away, crash before new->data (the lethal window)
+    # window 1: compacted dir fully written, data renamed away, crash
+    # before new->data (the lethal window)
     shutil.copytree(data, data + ".new-dead1")
-    _journal("dead1")
     os.rename(data, data + ".old-dead1")
     assert not os.path.exists(data)
-    _recover_compact(idx)
-    assert os.path.exists(data)
-    assert not os.path.exists(data + ".new-dead1")
-    assert not os.path.exists(data + ".old-dead1")
     got = {
         (r["query_id"], r["neighbor_id"], r["cos"])
         for r in ann_query_index(spark, idx, _queries(e), k=5).collect()
     }
     assert got == want
+    assert os.path.exists(data)
+    assert not os.path.exists(data + ".old-dead1")
+    assert os.path.exists(data + ".new-dead1")  # the orphan is never installed
 
-    # window 2: crash after new->data (journal still present), old
-    # leftover remains
+    # window 2: crash after new->data, old leftover remains
     shutil.copytree(data, data + ".old-dead2")
-    _journal("dead2")
-    # entry points heal implicitly (query calls _recover_compact)
+    # entry points heal implicitly (the query's reader window)
     got2 = {
         (r["query_id"], r["neighbor_id"], r["cos"])
         for r in ann_query_index(spark, idx, _queries(e), k=5).collect()
@@ -354,8 +340,9 @@ def test_compact_crash_recovery_rolls_forward(spark, tmp_path):
     assert got2 == want
     assert not os.path.exists(data + ".old-dead2")
 
-    # and a full compaction still round-trips
+    # and a full compaction still round-trips, cleaning the orphan
     compact_vector_index(spark, idx)
+    assert not os.path.exists(data + ".new-dead1")
     got3 = {
         (r["query_id"], r["neighbor_id"], r["cos"])
         for r in ann_query_index(spark, idx, _queries(e), k=5).collect()
@@ -435,3 +422,86 @@ def test_string_ids_work_across_the_ann_surface(spark, tmp_path):
     empty = qs.limit(0)
     assert dict(ivf_topk(es, empty, k=5).dtypes)["query_id"] == "string"
     assert dict(brute_force_topk_fast(es, empty, k=5).dtypes)["query_id"] == "string"
+
+
+def _plant_corrupt_part_after_writes(monkeypatch):
+    """Every parquet write into an index ``data`` dir also drops a
+    garbage part file into one of its bucket partitions — a corrupt
+    footer the very next read of the dir meets."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **kw):
+        real(self, path, *a, **kw)
+        if os.path.basename(path) == "data":
+            part = sorted(d for d in os.listdir(path) if d.startswith("bucket="))[0]
+            with open(os.path.join(path, part, "part-99999-corrupt.parquet"), "wb") as f:
+                f.write(b"not a parquet file at all")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def test_corrupt_part_file_makes_build_and_update_raise(spark, tmp_path, monkeypatch):
+    """Only an ABSENT or EMPTY data dir reads as "no vectors": a corrupt
+    part file used to be swallowed by bare ``except Exception`` blocks
+    into ``n_vectors`` 0 (build) or ``+= n_added`` (update's recount)."""
+    import pytest
+
+    from chillastic_spark.sources.vector_index import _meta
+
+    e = load(spark, SF, "embeddings")
+    ok = str(tmp_path / "vidx-ok")
+    build_vector_index(e.filter("vec_id < 20"), ok, planes=PLANES)
+    n_before = _meta(ok)["n_vectors"]
+
+    with monkeypatch.context() as m:
+        _plant_corrupt_part_after_writes(m)
+        with pytest.raises(Exception, match="(?i)parquet"):
+            build_vector_index(
+                e.filter("vec_id < 20"), str(tmp_path / "vidx-bad"), planes=PLANES
+            )
+        with pytest.raises(Exception, match="(?i)parquet"):
+            update_vector_index(e.filter("vec_id between 20 and 24"), ok)
+    # the failed update never wrote a miscounted meta
+    assert _meta(ok)["n_vectors"] == n_before
+
+
+def _clustered(spark, n=96):
+    rows = [
+        (i, [float(i % 4 == j) + 0.01 * (i % 7) for j in range(4)]) for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def test_ivf_calibration_falls_back_only_on_value_error(spark, tmp_path, monkeypatch, caplog):
+    """The nprobe calibration is advisory for exactly one failure: a
+    corpus too small to hold out queries from (``ValueError``) builds
+    uncalibrated with a warning. Any other error is a bug and must
+    propagate instead of silently serving the uncalibrated default."""
+    import logging
+
+    import pytest
+
+    import chillastic_spark.operators.similarity as sim
+    from chillastic_spark.sources.vector_index import build_ivf_index
+
+    e = _clustered(spark)
+
+    def type_error(*a, **kw):
+        raise TypeError("calibrate_nprobe() got an unexpected keyword")
+
+    monkeypatch.setattr(sim, "calibrate_nprobe", type_error)
+    with pytest.raises(TypeError, match="unexpected keyword"):
+        build_ivf_index(e, str(tmp_path / "ivf-type"), n_cells=4)
+
+    def value_error(*a, **kw):
+        raise ValueError("ivf_recall_curve: no usable held-out queries")
+
+    monkeypatch.setattr(sim, "calibrate_nprobe", value_error)
+    with caplog.at_level(logging.WARNING, logger="chillastic_spark.vector_index"):
+        meta = build_ivf_index(e, str(tmp_path / "ivf-value"), n_cells=4)
+    assert meta["calibrated_nprobe"] is None and meta["calibration"] is None
+    assert meta["n_vectors"] == 96
+    assert "nprobe calibration skipped" in caplog.text
+    assert "no usable held-out queries" in caplog.text
