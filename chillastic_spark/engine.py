@@ -28,7 +28,7 @@ from chillastic_spark.operators.mutate import apply_data_mutators, mutate_object
 from chillastic_spark.plans import Bound, DataFrameSizeStats, plan_bounds
 from chillastic_spark.registry import Filters, Mutators
 from chillastic_spark.sinks import upsert
-from chillastic_spark.sources import DocumentStore, open_store
+from chillastic_spark.sources import DocumentStore, open_store, size_range
 
 
 class TaskError(RuntimeError):
@@ -66,12 +66,15 @@ class TaskState:
         file keys completed/progress on `-1.0` renderings while fresh
         producers emit `-1`, so the resume anti-join would miss and
         re-enqueue already-completed subtasks. One rewrite on read
-        makes old and new state formats interchangeable."""
+        makes old and new state formats interchangeable. An id that is
+        not a subtask (malformed JSON: ValueError; unknown keys or a
+        non-object: TypeError) is kept verbatim; any other error is a
+        bug and propagates."""
 
         def canon(sid: str) -> str:
             try:
                 return Subtask.from_id(sid).subtask_id()
-            except Exception:
+            except (ValueError, TypeError):
                 return sid  # unknown shape: keep verbatim
 
         self.data["backlog"] = [[canon(s), c] for s, c in self.data["backlog"]]
@@ -350,48 +353,69 @@ class Transfer:
     def mutate(self, objs: list, type_: str) -> list:
         return mutate_objects(objs, self.mutators_by_type.get(type_))
 
-    def _scan(self, subtask: Subtask) -> DataFrame:
-        """One (index,type,[size-range)) slice with the data mutator
-        chain applied (transfer.js:103-151 reshaped: the scroll loop IS
-        the partitioned scan; retries are Spark task retries)."""
-        read_kw = {}
-        if hasattr(self.source, "deliver"):  # ES source pages at flushSize
-            read_kw["flush_size"] = _flush_size(subtask)
-        df = self.source.read(
-            self.spark, subtask.index, subtask.type, subtask.min_size,
-            subtask.max_size, **read_kw,
+    def scan(self, group: SliceGroup) -> DataFrame:
+        """ONE mutator pass over a slice group's (index, type), each row
+        tagged with the ordinal of the member it was read for, so the
+        rows are exactly the union of one scan per member
+        (transfer.js:103-151 reshaped: the scroll loop IS the
+        partitioned scan; retries are Spark task retries).
+
+        A store source is read ONCE over the range covering every
+        member; each row is tagged with every member whose size range
+        holds its PRE-mutation ``_size`` (``sources.size_range``; a
+        mutator may rewrite ``_size`` and ``_index``). A row in k member
+        ranges comes out k times, and a row in none (a completed member
+        between two pending ones) not at all. A wire source keeps one
+        scroll per member at the member's own flushSize: one covering
+        scroll would have to page the small docs at the large docs'
+        flushSize."""
+        if hasattr(self.source, "deliver"):
+            df = functools.reduce(DataFrame.unionByName, [
+                self.source.read(
+                    self.spark, m.index, m.type, m.min_size, m.max_size,
+                    flush_size=_flush_size(m),
+                ).withColumn(self.ORDINAL, F.lit(i))
+                for i, m in enumerate(group)
+            ])
+        else:
+            ranges = [size_range(m.min_size, m.max_size) for m in group]
+            ranged = all(r is not None for r in ranges)
+            head = group.members[0]
+            df = self.source.read(
+                self.spark, head.index, head.type,
+                min(m.min_size for m in group) if ranged else -1,
+                max(m.max_size for m in group) if ranged else -1,
+            )
+            tags = [F.lit(i) if r is None else F.when(r, F.lit(i)) for i, r in enumerate(ranges)]
+            df = df.withColumn(self.ORDINAL, F.explode(F.array_compact(F.array(*tags))))
+        return apply_data_mutators(
+            df, self.mutators_by_type.get("data"), passthrough=[self.ORDINAL]
         )
-        return apply_data_mutators(df, self.mutators_by_type.get("data"))
 
     def transfer_data(self, work: "Subtask | SliceGroup") -> list[int]:
         """Scan, mutate and deliver a subtask or a slice group; returns
         the rows delivered per member, in member order.
 
-        A wire or Delta destination gets one ``deliver`` per member at
-        the member's planned flushSize, which drives the bulk batch size
-        exactly as in the reference (transfer.js:145, :159-167). A
-        parquet destination gets ONE ``upsert`` for the whole group: the
-        members' scans are tagged with their position and unioned, and
-        the MERGE keeps the later member's row on a key two members
-        share, so the rows match member-by-member delivery while the
-        fixed cost of a MERGE (its Spark jobs and bucket rewrites) is
-        paid once per slice instead of once per size range."""
+        A parquet destination gets ONE :meth:`scan` and ONE ``upsert``
+        for the whole group: the MERGE keeps the later member's row on a
+        key two members share, so the rows match member-by-member
+        delivery while the fixed costs — a mutator pass per member (and
+        a read per member from a store source), a MERGE's Spark jobs and
+        bucket rewrites — are paid once per slice instead of once per
+        size range. A wire or Delta destination gets a one-member scan
+        and one ``deliver`` per member at the member's planned
+        flushSize, which drives the bulk batch size exactly as in the
+        reference (transfer.js:145, :159-167)."""
         group = work if isinstance(work, SliceGroup) else SliceGroup((work,))
         if self.merges:
-            tagged = [
-                self._scan(sub).withColumn(self.ORDINAL, F.lit(i))
-                for i, sub in enumerate(group)
-            ]
-            merged = upsert(
-                self.spark, self.dest,
-                functools.reduce(DataFrame.unionByName, tagged),
-                ordinal=self.ORDINAL,
-            )
+            merged = upsert(self.spark, self.dest, self.scan(group), ordinal=self.ORDINAL)
             delivered = [merged.get(i, 0) for i in range(len(group))]
         else:
             delivered = [
                 self.dest.deliver(
-                    self.spark, self._scan(sub), flush_size=_flush_size(sub)
+                    self.spark,
+                    self.scan(SliceGroup((sub,))).drop(self.ORDINAL),
+                    flush_size=_flush_size(sub),
                 )
                 for sub in group
             ]
@@ -940,7 +964,7 @@ class Engine:
             dest = open_store(task.destination)
             mutators = self.mutators.load_by_type(task.mutators, task.arguments)
             transfer = Transfer(self.spark, source, dest, mutators)
-        except Exception:
+        except Exception:  # not a subtask failure: release the flock, re-raise
             if not shared:
                 state.release_writer()
             raise
@@ -972,13 +996,13 @@ class Engine:
                             Progress(tick=1, transferred=delivered, total=sub.count),
                         )
                     state.complete(sub)
-                except Exception:
+                except Exception:  # subtask-failure boundary: its checkpoint
                     state.fail(sub, traceback.format_exc(limit=5))
 
         def run_alone(sub: Subtask) -> None:
             try:
                 (delivered,) = deliver(SliceGroup((sub,)))
-            except Exception:
+            except Exception:  # subtask-failure boundary: its delivery
                 with lock:
                     state.fail(sub, traceback.format_exc(limit=5))
                 return
@@ -1006,7 +1030,7 @@ class Engine:
                 return True
             try:
                 delivered = deliver(group)
-            except Exception:
+            except Exception:  # subtask-failure boundary: a group's delivery
                 # the group's MERGE did not land: retry member by
                 # member, so only a member that fails on its own is
                 # logged and left for the next rebuild (a stop skips

@@ -13,9 +13,10 @@ the fully-general path.
 """
 from __future__ import annotations
 
-from typing import Any, Iterable, Optional
+from typing import Any, Iterable, Optional, Sequence
 
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from chillastic_spark.sources import ENVELOPE_SCHEMA
 
@@ -55,13 +56,22 @@ QUARANTINE_INDEX = "chillastic-quarantine"
 
 
 def apply_data_mutators(
-    df: DataFrame, mutators: Optional[list], quarantine: bool = False
+    df: DataFrame,
+    mutators: Optional[list],
+    quarantine: bool = False,
+    passthrough: Sequence[str] = (),
 ) -> DataFrame:
     """Apply data-type mutators to an envelope DataFrame.
 
     Each row becomes {_index,_type,_id,_source: dict,_size}; the mutated
     doc's envelope fields are written back (mutators may re-route
     _index — examples/mutators/indexDate.js). No-op without mutators.
+
+    ``passthrough`` names extra columns carried through the fold
+    unchanged, quarantined rows included (the engine's slice-group
+    member tag); the mutator's doc never sees them. When mutators run,
+    every other non-envelope column is dropped; without mutators ``df``
+    is returned as is, every column kept.
 
     ``quarantine=True`` is the per-record error side-channel (SURVEY S5,
     the badRecordsPath analog of transfer.js:306-352's bulk-error
@@ -81,6 +91,8 @@ def apply_data_mutators(
     chain = [(m.predicate, m.mutate, m.arguments) for m in mutators]
     do_quarantine = quarantine
     q_index = QUARANTINE_INDEX  # captured by value: closure stays self-contained
+    keep = list(passthrough)
+    columns = ["_index", "_type", "_id", "_source", "_size", *keep]
 
     def run(batches):
         import json as _json
@@ -157,6 +169,7 @@ def apply_data_mutators(
                                 doc.get("_source", {}), sort_keys=True
                             ),
                             "_size": size,
+                            **{c: rec[c] for c in keep},
                         }
                 except Exception as e:  # noqa: BLE001 — user-code boundary
                     if not do_quarantine:
@@ -175,14 +188,16 @@ def apply_data_mutators(
                                 sort_keys=True,
                             ),
                             "_size": rec.get("_size"),
+                            **{c: rec[c] for c in keep},
                         }
                     )
                     continue
                 if out_row is None:
                     continue
                 rows.append(out_row)
-            yield _pd.DataFrame(
-                rows, columns=["_index", "_type", "_id", "_source", "_size"]
-            )
+            yield _pd.DataFrame(rows, columns=columns)
 
-    return df.mapInPandas(run, ENVELOPE_SCHEMA)
+    schema = T.StructType(
+        [*ENVELOPE_SCHEMA.fields, *(df.schema[c] for c in keep)]
+    )
+    return df.mapInPandas(run, schema)

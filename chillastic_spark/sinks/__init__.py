@@ -9,7 +9,9 @@ On parquet (this repo's storage) the merge is BUCKET-SCOPED: every
 index is laid out in N hash buckets of ``_id`` (sources.bucket_expr),
 and a batch rewrites only the buckets containing its keys — read the
 touched 1/N-th, ``existing ⟕anti new ∪ new``, atomic per-bucket dir
-swap. Write amplification is O(|index|·touched/N) per batch instead of
+swap, each rewritten bucket written as ONE part file
+(``DocumentStore.staged_buckets``), so the next merge reads no small
+files back. Write amplification is O(|index|·touched/N) per batch instead of
 O(|index|): a 1k-doc micro-batch against a 1 TB index touches ≤1k
 buckets' worth of data, not the whole terabyte. On a real deployment
 the same call maps 1:1 to Delta/Iceberg ``MERGE INTO`` over a
@@ -112,7 +114,8 @@ def upsert(
 
     ``ordinal`` names an integer column that tags each row with the
     batch it came from when several batches are MERGEd as one (the
-    engine's slice group: one tag per size-range subtask). Duplicates
+    engine's slice group: one tag per size-range subtask, a row in two
+    members' ranges arriving once per member). Duplicates
     then keep the HIGHEST ordinal first and fall back to the tie-break
     above — the row a one-batch-at-a-time delivery in ordinal order
     would have left. The column is never written; a row a later

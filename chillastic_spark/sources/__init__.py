@@ -112,6 +112,21 @@ def bucket_expr(n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(F.col("_id")), F.lit(n_buckets)).cast("int")
 
 
+def size_range(min_size: float, max_size: float) -> Optional[F.Column]:
+    """The one size-range test: ``min_size <= _size < max_size``, or
+    None when the bounds set no range (subtask.js:61-74: both >= 0).
+    A NULL ``_size`` behaves as size 0 (matching the planner's stats),
+    so an unsized doc lands in EXACTLY the range holding 0 — a bare
+    range predicate would silently drop it."""
+    if not (min_size >= 0 and max_size >= 0):
+        return None
+    size = F.col("_size")
+    in_range = (size >= min_size) & (size < max_size)
+    if min_size <= 0 < max_size:
+        in_range = in_range | size.isNull()
+    return in_range
+
+
 class StoreError(RuntimeError):
     pass
 
@@ -444,13 +459,8 @@ class DocumentStore:
         df = df.withColumn("_index", F.lit(index))
         if type is not None:
             df = df.filter(F.col("_type") == type)
-        if min_size >= 0 and max_size >= 0:
-            # NULL _size behaves as size 0 (matching the planner's
-            # stats) so unsized docs land in EXACTLY the lowest bucket —
-            # a bare range predicate would silently drop them
-            in_range = (F.col("_size") >= min_size) & (F.col("_size") < max_size)
-            if min_size <= 0 < max_size:
-                in_range = in_range | F.col("_size").isNull()
+        in_range = size_range(min_size, max_size)
+        if in_range is not None:
             df = df.filter(in_range)
         return df
 
@@ -559,14 +569,21 @@ class DocumentStore:
         """Write ``df`` beside the live index, hash-partitioned by
         :func:`bucket_expr`, and yield ``{bucket: staged_dir}`` for the
         non-empty buckets — the ONE staged write every bucketed
-        mutation (merge, migration, append) makes before it touches a
-        live dir, so a crash mid-write leaves the index as it was. The
-        staging dir is removed on exit; move out what you keep."""
+        mutation (merge, migration, append, purge) makes before it
+        touches a live dir, so a crash mid-write leaves the index as it
+        was. The staging dir is removed on exit; move out what you keep.
+
+        Rows are shuffled by bucket first, into at most
+        ``defaultParallelism`` write tasks, so each bucket is written by
+        ONE task and its staged dir holds exactly one part file. An
+        unclustered write leaves one file per write task in every
+        bucket, and the next MERGE has to read them all back."""
         tmp = self.index_path(index) + ".merge-" + uuid.uuid4().hex[:8]
+        tasks = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
         try:
-            df.withColumn("__bucket", bucket_expr(n_buckets)).write.partitionBy(
-                "__bucket"
-            ).parquet(tmp)
+            df.withColumn("__bucket", bucket_expr(n_buckets)).repartition(
+                tasks, "__bucket"
+            ).write.partitionBy("__bucket").parquet(tmp)
             yield {
                 int(d.split("=", 1)[1]): os.path.join(tmp, d)
                 for d in os.listdir(tmp)

@@ -3,7 +3,10 @@ no Spark): per-round calibration from interleaved probes, the >tol
 noise flag, quiet-round medians with the all-noisy fallback, and the
 fastest-window normalization. These numbers go into BENCH_r{N}.json
 and drive the cross-round performance comparison, so the arithmetic
-is pinned exactly."""
+is pinned exactly. The same holds for scripts/ab_perfbench.py's
+summary of interleaved parent/change pairs (quartiles, pairs won, the
+gain / bound / unresolved verdict)."""
+import json
 import statistics
 
 import bench
@@ -144,3 +147,142 @@ def test_end_to_end_noise_recovery():
     for n, t in quiet_truth.items():
         for r in norm:
             assert abs(r[n] - t) < 1e-9
+
+
+def _ab():
+    """scripts/ab_perfbench.py, imported by path (scripts/ is no package)."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), "..", "scripts", "ab_perfbench.py")
+    spec = importlib.util.spec_from_file_location("ab_perfbench", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_ab_quartiles_are_inclusive_and_single_run_safe():
+    ab = _ab()
+    assert ab.quartiles([4.0, 1.0, 3.0, 2.0, 5.0]) == (2.0, 3.0, 4.0)
+    assert ab.quartiles([1.0, 2.0, 3.0, 4.0]) == (1.75, 2.5, 3.25)
+    assert ab.quartiles([7.0]) == (7.0, 7.0, 7.0)
+
+
+def test_ab_pairs_won_follow_the_better_direction_and_ties_count_for_neither():
+    ab = _ab()
+    pairs = [(3.0, 2.0), (3.0, 3.0), (2.0, 4.0), (5.0, 1.0)]
+    assert ab.pairs_won(pairs, "lower") == 2
+    assert ab.pairs_won(pairs, "higher") == 1
+
+
+def test_ab_gain_needs_nine_tenths_and_a_gap_beyond_the_parent_iqr():
+    ab = _ab()
+    # parent 10..19 (IQR 4.5), change 5 lower on every pair: a gain
+    pairs = [(10.0 + i, 5.0 + i) for i in range(10)]
+    s = ab.summarize(pairs, "lower", 0.25)
+    assert s["won"] == 10 and s["verdict"] == "gain"
+    assert s["parent"] == {"median": 14.5, "q1": 12.25, "q3": 16.75}
+    assert s["change"]["median"] == 9.5 and s["ratio"] == 9.5 / 14.5
+    # 8 of 10 won is short of nine tenths, whatever the gap
+    lost = pairs[:8] + [(10.0, 11.0), (11.0, 12.0)]
+    assert ab.summarize(lost, "lower", 0.25)["verdict"] != "gain"
+    # every pair won, but by less than the parent's IQR: no gain
+    close = [(100.0 + i, 99.9 + i) for i in range(10)]
+    assert ab.summarize(close, "lower", 0.25)["verdict"] == "within bound"
+
+
+def test_ab_bound_and_spread_verdicts():
+    ab = _ab()
+    # docs/s is better higher: 20% lower is inside a 0.25 bound
+    steady = [(100.0, 80.0)] * 4
+    s = ab.summarize(steady, "higher", 0.25)
+    assert abs(s["worse_by"] - 0.2) < 1e-12 and s["spread"] == 0.0
+    assert s["verdict"] == "within bound"
+    assert ab.summarize([(100.0, 70.0)] * 4, "higher", 0.25)["verdict"] == "worse"
+    # parent IQR/median 0.5 > bound: unresolved ...
+    noisy = [(1.0, 1.0), (2.0, 2.1), (3.0, 2.9), (2.0, 2.0)]
+    assert ab.summarize(noisy, "lower", 0.25)["verdict"] == "unresolved"
+    # ... unless every change run beats every parent run
+    apart = [(10.0, 1.0), (20.0, 2.0), (30.0, 1.5), (20.0, 1.2), (25.0, 1.1)]
+    s = ab.summarize(apart, "lower", 0.25)
+    assert s["won"] == 5 and s["verdict"] == "gain"
+    assert ab.summarize(apart[:4] + [(10.0, 11.0)], "lower", 0.25)["verdict"] == "unresolved"
+    beat = [(10.0, 4.0), (20.0, 9.0), (30.0, 5.0), (12.0, 3.0)]
+    assert ab.summarize(beat, "lower", 0.25)["verdict"] in {"gain", "better"}
+
+
+def test_ab_main_alternates_order_and_reports_each_metric(monkeypatch, tmp_path, capsys):
+    ab = _ab()
+    calls = []
+
+    def fake_run(tree, workload, seed):
+        side = "parent" if tree == "parent-tree" else "change"
+        calls.append((side, seed))
+        v = (10.0 if side == "parent" else 5.0) + seed / 100
+        names = ("wall_s", "admit_s", "drain_s", "docs_per_s", "setup_s")
+        return {"correct": True, "failed": 0,
+                "metrics": {n: {"value": v, "unit": "s"} for n in names}}
+
+    monkeypatch.setattr(ab, "run_bench", fake_run)
+    out = tmp_path / "ab.json"
+    ab.main(["--parent", "parent-tree", "--pairs", "4", "--seed", "3",
+             "--workloads", "w", "--out", str(out)])
+    assert calls == [
+        ("parent", 3), ("change", 3), ("change", 4), ("parent", 4),
+        ("parent", 5), ("change", 5), ("change", 6), ("parent", 6),
+    ]
+    summary = json.loads(out.read_text())["summary"]["w"]
+    assert summary["all_correct"] is True
+    # halved seconds are a gain; halved docs/s (better higher) is worse
+    assert summary["metrics"]["drain_s"]["verdict"] == "gain"
+    assert summary["metrics"]["drain_s"]["won"] == 4
+    assert summary["metrics"]["docs_per_s"]["verdict"] == "worse"
+    assert "drain_s" in capsys.readouterr().out
+
+
+def test_ab_run_bench_runs_the_benchmark_command_for_its_run_seconds(monkeypatch):
+    ab = _ab()
+    seen = {}
+
+    class Done:
+        returncode = 0
+        stdout = '{"correct": true}\n'
+        stderr = ""
+
+    def fake_subprocess_run(argv, **kw):
+        seen["argv"], seen["cwd"] = argv, kw["cwd"]
+        return Done()
+
+    monkeypatch.setattr(ab.subprocess, "run", fake_subprocess_run)
+    assert ab.run_bench("tree", "w", 7) == {"correct": True}
+    assert seen["cwd"] == "tree"
+    assert seen["argv"] == [
+        *ab.SPEC["command"], "--workload", "w", "--seed", "7",
+        "--seconds", str(ab.SPEC["run_seconds"]), "--trace", "0",
+    ]
+
+
+def test_ab_default_parent_rev_is_head_while_the_change_is_uncommitted(tmp_path):
+    import subprocess
+
+    ab = _ab()
+
+    def git(*args):
+        subprocess.run(
+            ["git", "-c", "user.name=t", "-c", "user.email=t@t", *args],
+            cwd=tmp_path, check=True, capture_output=True,
+        )
+
+    git("init", "-q")
+    (tmp_path / "f").write_text("1")
+    git("add", "f")
+    git("commit", "-qm", "parent")
+    assert ab.default_parent_rev(str(tmp_path)) == "HEAD~"
+    (tmp_path / "f").write_text("2")  # modified, unstaged
+    assert ab.default_parent_rev(str(tmp_path)) == "HEAD"
+    git("add", "f")  # staged
+    assert ab.default_parent_rev(str(tmp_path)) == "HEAD"
+    git("commit", "-qm", "change")
+    assert ab.default_parent_rev(str(tmp_path)) == "HEAD~"
+    (tmp_path / "new").write_text("")  # untracked
+    assert ab.default_parent_rev(str(tmp_path)) == "HEAD"

@@ -222,3 +222,60 @@ def test_null_index_is_a_clear_error(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="NULL _index"):
         upsert(spark, store, bad, n_buckets=N_BUCKETS)
+
+
+def test_every_staged_bucket_write_lands_one_file_per_bucket(spark, tmp_path):
+    """All four bucketed writers (migration upsert, bucket-scoped merge,
+    bucketed append, purge) write each bucket from ONE task: a bucket
+    dir they write holds exactly one part file (an append adds exactly
+    one), and the index holds exactly the expected rows."""
+    store = DocumentStore(str(tmp_path / "s"))
+    expected = {f"doc{i}": {"v": i} for i in range(200)}
+
+    def files():
+        return {
+            os.path.basename(p): sorted(f for f in os.listdir(p) if f.endswith(".parquet"))
+            for p in store.bucket_paths("ix")
+        }
+
+    def holds_expected():
+        got = {r["_id"]: json.loads(r["_source"]) for r in store.read(spark, "ix").collect()}
+        return got == expected
+
+    # several flat files, and batches spread over several partitions, so
+    # an unclustered write would give a bucket one file per task
+    store.write_documents(_corpus(spark).repartition(4), "ix")
+    rows = [(f"doc{i}", 1000 + i) for i in range(0, 200, 3)]
+    upsert(spark, store, _batch(spark, rows).repartition(4), n_buckets=N_BUCKETS)
+    expected.update({i: {"v": v} for i, v in rows})
+    after_migration = files()
+    assert len(after_migration) == N_BUCKETS
+    assert all(len(f) == 1 for f in after_migration.values())
+    assert holds_expected()
+
+    rows = [(f"doc{i}", 2000 + i) for i in range(0, 40, 7)] + [("new1", 1), ("new2", 2)]
+    upsert(spark, store, _batch(spark, rows).repartition(4))
+    expected.update({i: {"v": v} for i, v in rows})
+    after_merge = files()
+    assert after_merge != after_migration  # the touched buckets were rewritten
+    assert all(len(f) == 1 for f in after_merge.values())
+    assert holds_expected()
+
+    rows = [(f"app{i}", i) for i in range(12)]
+    store.write_documents(_batch(spark, rows).repartition(4), "ix", mode="append")
+    expected.update({i: {"v": v} for i, v in rows})
+    appended = {f"bucket-{b:04d}" for b in _buckets_of(spark, [i for i, _ in rows])}
+    after_append = files()
+    for name, fs in after_append.items():
+        assert len(fs) == len(after_merge.get(name, [])) + (name in appended), name
+    assert holds_expected()
+
+    victims = ["app0", "app5", "doc9", "doc100"]
+    assert purge(spark, store, "ix", victims) == 4
+    for v in victims:
+        del expected[v]
+    purged = {f"bucket-{b:04d}" for b in _buckets_of(spark, victims)}
+    after_purge = files()
+    assert all(len(after_purge[name]) == 1 for name in purged)
+    assert all(after_purge[n] == fs for n, fs in after_append.items() if n not in purged)
+    assert holds_expected()

@@ -733,3 +733,165 @@ def test_crash_between_group_merge_and_complete_rebuilds_doc_exact(
     assert status["completed"] == 30 and status["backlog"] == 0
     assert status["errors"] == 0
     assert _dst_rows(spark, dst) == _dst_rows(spark, clean)
+
+
+# ------------------------------------------------------ one-pass group scan
+# 30 sized docs (_size 0, 10, .., 290) plus 4 with a NULL _size, in two types
+PARITY = [
+    ("ix", "t", str(i), json.dumps({"n": i}), 10 * i) for i in range(30)
+] + [("ix", "t", f"u{i}", json.dumps({"n": -i}), None) for i in range(4)] + [
+    ("ix", "other", f"o{i}", json.dumps({"n": i}), 10 * i) for i in range(5)
+]
+
+# rewrites _size (out of every member's range) and re-routes _index, so
+# a tag taken after the mutation would drop or misfile the row
+RESIZE = """
+TYPE = "data"
+def predicate(doc, args):
+    return doc["_id"].startswith("u") or int(doc["_id"]) % 3 == 0
+def mutate(doc, args):
+    doc["_size"] = 1000 + (doc["_size"] or 0)
+    doc["_index"] = "ix_moved"
+    return doc
+"""
+
+
+def _parity_source(spark, tmp_path):
+    from chillastic_spark.sources import ENVELOPE_SCHEMA
+
+    src = DocumentStore(str(tmp_path / "src"))
+    src.write_documents(spark.createDataFrame(PARITY, ENVELOPE_SCHEMA), "ix")
+    return src
+
+
+def _member_union(transfer, group):
+    """The scan the group scan replaced, as the oracle: one read and one
+    mutator pass per member, tagged with its position, unioned."""
+    import functools
+
+    from pyspark.sql import DataFrame
+
+    from chillastic_spark.operators.mutate import apply_data_mutators
+
+    return functools.reduce(DataFrame.unionByName, [
+        apply_data_mutators(
+            transfer.source.read(transfer.spark, m.index, m.type, m.min_size, m.max_size),
+            transfer.mutators_by_type.get("data"),
+        ).withColumn(Transfer.ORDINAL, F.lit(i))
+        for i, m in enumerate(group)
+    ])
+
+
+def _all_rows(spark, store):
+    return sorted(
+        (r["_index"], r["_type"], r["_id"], r["_source"], r["_size"])
+        for ix in store.list_data_indices()
+        for r in store.read(spark, ix).collect()
+    )
+
+
+@pytest.mark.parametrize("ranges, mutators", [
+    # NULL sizes land with the member holding 0
+    ([(0, 100), (100, 200), (200, 300)], ()),
+    # no member holds 0: NULL sizes are delivered by none
+    ([(100, 200), (200, 300)], ()),
+    # overlapping ranges: a row in both comes out twice, the later wins
+    ([(0, 150), (100, 300)], ()),
+    # non-contiguous: the completed middle member's rows stay out
+    ([(0, 100), (200, 300)], ()),
+    # a member with no range is the whole slice
+    ([(0, 100), (-1, -1)], ()),
+    # the tag is the PRE-mutation size
+    ([(0, 100), (100, 200), (200, 300)], ("resize",)),
+], ids=["null-sizes", "no-zero", "overlap", "non-contiguous", "unranged", "resize"])
+def test_group_scan_matches_member_union(spark, tmp_path, ranges, mutators):
+    from chillastic_spark.model import SliceGroup
+
+    eng = _engine(spark, tmp_path)
+    eng.mutators.add("resize", RESIZE)
+    by_type = eng.mutators.load_by_type([ActionRef(id=m) for m in mutators])
+    src = _parity_source(spark, tmp_path)
+    group = SliceGroup(tuple(
+        Subtask(kind="documents", index="ix", type="t", min_size=lo, max_size=hi)
+        for lo, hi in ranges
+    ))
+    one_pass = DocumentStore(str(tmp_path / "one"))
+    reads = []
+    orig_read = src.read
+    src.read = lambda *a, **k: reads.append(a[1:]) or orig_read(*a, **k)
+    delivered = Transfer(spark, src, one_pass, by_type).transfer_data(group)
+    assert len(reads) == 1  # one scan for the whole group
+
+    union = DocumentStore(str(tmp_path / "union"))
+    oracle = Transfer(spark, src, union, by_type)
+    merged = upsert(spark, union, _member_union(oracle, group), ordinal=Transfer.ORDINAL)
+    assert delivered == [merged.get(i, 0) for i in range(len(group))]
+    assert _all_rows(spark, one_pass) == _all_rows(spark, union)
+    assert sum(delivered) > 0
+
+
+def test_group_scan_delivers_exact_counts(spark, tmp_path):
+    """Pins the parity oracle itself on the hand-counted case."""
+    from chillastic_spark.model import SliceGroup
+
+    src = _parity_source(spark, tmp_path)
+    dst = DocumentStore(str(tmp_path / "dst"))
+    group = SliceGroup(tuple(
+        Subtask(kind="documents", index="ix", type="t", min_size=lo, max_size=hi)
+        for lo, hi in [(0, 150), (100, 200), (250, 300)]
+    ))
+    # [0,150) holds sizes 0..90 (10 docs) + 4 NULL; its 100..140 rows
+    # go to the later [100,200) member (10 docs); [250,300) holds 5
+    assert Transfer(spark, src, dst).transfer_data(group) == [14, 10, 5]
+    assert dst.count(spark, "ix") == 29
+
+
+def test_data_mutators_pass_tag_through_quarantine(spark):
+    from chillastic_spark.operators.mutate import QUARANTINE_INDEX, apply_data_mutators
+
+    df = spark.createDataFrame(
+        [("ix", "t", str(i), json.dumps({"n": i}), i, i % 2) for i in range(6)],
+        "_index string, _type string, _id string, _source string, _size long, tag int",
+    )
+
+    def boom(doc, args):
+        if doc["_source"]["n"] >= 3:
+            raise ValueError("bad doc")
+        assert "tag" not in doc and "tag" not in doc["_source"]
+        doc["_source"]["seen"] = True
+        return doc
+
+    class Mut:
+        predicate, mutate, arguments = staticmethod(lambda d, a: True), staticmethod(boom), None
+
+    out = apply_data_mutators(df, [Mut()], quarantine=True, passthrough=["tag"])
+    assert out.columns[-1] == "tag" and out.schema["tag"].dataType.simpleString() == "int"
+    rows = {r["_id"]: r for r in out.collect()}
+    assert {r["_index"] for r in rows.values()} == {"ix", QUARANTINE_INDEX}
+    for i in range(6):
+        r = rows[str(i)] if i < 3 else rows[f"ix/{i}"]
+        assert r["tag"] == i % 2
+    assert rows["ix/4"]["_index"] == QUARANTINE_INDEX
+
+
+def test_canonicalize_keeps_malformed_ids_and_propagates_bugs(tmp_path, monkeypatch):
+    path = tmp_path / "task-t1.json"
+    legacy = Subtask(kind="documents", index="ix", min_size=0.0, max_size=10.0)
+    path.write_text(json.dumps({
+        "task": None, "total": 0, "errors": [],
+        "backlog": [["not json", 1], ['{"kind": "documents", "bogus": 1}', 2]],
+        "completed": {'{"index":"ix","kind":"documents","max_size":10.0,"min_size":0.0}': 3},
+        "progress": {"[1, 2]": {}},
+    }))
+    data = TaskState(str(tmp_path), "t1").data
+    # malformed (ValueError) and unknown-shape (TypeError) ids verbatim
+    assert data["backlog"] == [["not json", 1], ['{"kind": "documents", "bogus": 1}', 2]]
+    assert data["progress"] == {"[1, 2]": {}}
+    assert list(data["completed"]) == [legacy.subtask_id()]  # canonicalized
+
+    def broken(sid, count=0):
+        raise RuntimeError("bug in from_id")
+
+    monkeypatch.setattr(Subtask, "from_id", staticmethod(broken))
+    with pytest.raises(RuntimeError, match="bug in from_id"):
+        TaskState(str(tmp_path), "t1")

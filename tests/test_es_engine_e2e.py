@@ -193,6 +193,79 @@ def test_wire_destination_gets_one_deliver_per_subtask(
     assert len(dst.contents("ix")) == 30
 
 
+def test_es_source_slice_group_scrolls_each_member_at_its_flush_size(
+    spark, tmp_path, clusters, monkeypatch
+):
+    """An ES source into a parquet destination: a 3-member slice group
+    still opens each member's scroll for its own size range at its own
+    flushSize (one covering scroll would page the small docs at the
+    large docs' flushSize), then mutates and MERGEs the group once, and
+    lands the rows and per-member progress that member-by-member
+    delivery does."""
+    import json
+    from urllib.parse import parse_qs, urlsplit
+
+    import chillastic_spark.engine as engine_mod
+    import chillastic_spark.plans as plans
+    from chillastic_spark.engine import TaskState
+    from chillastic_spark.sources import DocumentStore
+
+    src, src_url, _dst, _ = clusters
+    # sized 10..300: planning splits the one slice into three ranges
+    src.seed("ix", "t1", {f"d{i}": {"v": i, "__size": 10 * (i + 1)} for i in range(30)})
+    eng = Engine(spark, str(tmp_path / "state"))
+    progress, merges = [], []
+    orig_progress = TaskState.update_progress
+    orig_upsert = engine_mod.upsert
+
+    def record(self, sub, p):
+        progress.append((sub.min_size, p.transferred))
+        return orig_progress(self, sub, p)
+
+    def count_upsert(*a, **kw):
+        merges.append(1)
+        return orig_upsert(*a, **kw)
+
+    monkeypatch.setattr(TaskState, "update_progress", record)
+    monkeypatch.setattr(engine_mod, "upsert", count_upsert)
+    # a 20 kB bulk target gives each range its own flushSize
+    monkeypatch.setattr(plans, "TARGET_BULK_BYTES", 20_000)
+
+    def run(task_id, step):
+        dst = DocumentStore(str(tmp_path / task_id))
+        eng.add_task(task_id, Task(
+            source=src_url, destination=dst.root,
+            transfer=TransferSpec(from_indices="ix"),
+        ))
+        assert len(TaskState(eng.state_root, task_id).data["backlog"]) == 3
+        src.request_log.clear()  # planning's count and size scrolls
+        progress.clear()
+        merges.clear()
+        while eng.run_task(task_id, max_subtasks=step)["backlog"]:
+            pass
+        scrolls = sorted(
+            (
+                json.dumps(json.loads(r["body"])["query"]["range"]["_size"], sort_keys=True),
+                parse_qs(urlsplit(r["path"]).query)["size"][0],
+            )
+            for r in src.requests_of("search")
+        )
+        rows = sorted(
+            (r["_id"], r["_source"], r["_size"]) for r in dst.read(spark, "ix").collect()
+        )
+        return scrolls, sorted(progress), len(merges), rows
+
+    grouped_scrolls, grouped_progress, grouped_merges, grouped_rows = run("grouped", None)
+    single_scrolls, single_progress, single_merges, single_rows = run("single", 1)
+    # the same scrolls as member by member: one range and one page size each
+    assert grouped_scrolls == single_scrolls
+    assert len({r for r, _ in grouped_scrolls}) == 3
+    assert len({n for _, n in grouped_scrolls}) == 3
+    assert (grouped_merges, single_merges) == (1, 3)
+    assert grouped_progress == single_progress == [(0, 18), (184, 9), (271, 3)]
+    assert grouped_rows == single_rows and len(grouped_rows) == 30
+
+
 TYPELESS_DATA = """
 TYPE = "data"
 def predicate(doc, args):
