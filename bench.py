@@ -149,13 +149,25 @@ def split_contract_payload(
     per-query map is demoted to diagnostics (value_normalized stays —
     it is one scalar), keeping the required fields parseable no matter
     how many queries the bench grows. ``queries`` itself is never
-    demoted: it is the driver contract."""
+    demoted: it is the driver contract, so a line still over ``budget``
+    after the demotion is reported (a stderr warning and
+    ``stdout_over_budget``, its length, in the diagnostics) rather
+    than cut."""
     out = {k: full[k] for k in _CONTRACT_KEYS if k in full}
     diag = {k: v for k, v in full.items() if k not in out}
     line = json.dumps(out, separators=(",", ":"))
     if len(line) > budget and "queries_normalized" in out:
         diag["queries_normalized"] = out.pop("queries_normalized")
         diag["stdout_demoted"] = ["queries_normalized"]
+        line = json.dumps(out, separators=(",", ":"))
+    if len(line) > budget:
+        diag["stdout_over_budget"] = len(line)
+        print(
+            f"bench: the stdout line is {len(line)} chars, over its "
+            f"{budget}-char budget even after demotion; a tail capture "
+            "may cut it",
+            file=sys.stderr,
+        )
     return out, diag
 
 

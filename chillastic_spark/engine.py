@@ -25,7 +25,7 @@ from chillastic_spark.model import (
     ActionRef, Progress, SliceGroup, Subtask, Task, validate_object_id,
 )
 from chillastic_spark.operators.mutate import apply_data_mutators, mutate_objects
-from chillastic_spark.plans import Bound, DataFrameSizeStats, plan_bounds
+from chillastic_spark.plans import Bound, CollectedSizeStats, plan_bounds
 from chillastic_spark.registry import Filters, Mutators
 from chillastic_spark.sinks import upsert
 from chillastic_spark.sources import DocumentStore, open_store, size_range
@@ -447,9 +447,10 @@ class Engine:
         self.state_root = state_root
         # bounded planning parallelism (the reference planned its counts
         # at concurrency 10, app/services/subtasks.js:394): build_backlog
-        # probes stats/histograms/counts per (index,type) slice, and at
-        # thousands of slices a sequential loop serializes thousands of
-        # tiny Spark jobs (or wire round-trips) on the driver
+        # plans each (index,type) slice with one size-histogram probe (or
+        # one count under a flush_size override), and at thousands of
+        # slices a sequential loop serializes thousands of tiny Spark
+        # jobs (or wire round-trips) on the driver
         self.plan_concurrency = max(1, int(plan_concurrency))
         os.makedirs(state_root, exist_ok=True)
         self.mutators = Mutators(os.path.join(state_root, "registry"))
@@ -722,7 +723,8 @@ class Engine:
     # --------------------------------------------------------- planning
     def build_backlog(self, task_id: str, force: bool = False) -> TaskState:
         """subtasks.js:369-396: generate index + template + document
-        subtasks, subtract completed, count, enqueue FIFO.
+        subtasks, subtract completed, enqueue FIFO. Counts come with
+        the plan (``Bound.count``), not from one query per subtask.
 
         Refuses while subtasks are in flight: in SHARED mode the flock
         is free between worker ops, so a rebuild here would clear LIVE
@@ -748,7 +750,7 @@ class Engine:
                 "force=True only once the previous run is known dead"
             )
         # plan FIRST, clear after: persisting the cleared backlog before
-        # the source listing/count calls meant a transient source
+        # the source listing/planning calls meant a transient source
         # failure wiped the existing backlog on disk and left the task
         # reading as fully complete (total==completed, nothing queued)
         source = open_store(task.source)
@@ -770,25 +772,12 @@ class Engine:
         completed = state.completed_ids()  # resume anti-join (subtasks.js:385-392)
         pending = [s for s in potential if s.subtask_id() not in completed]
 
-        def _count(sub: Subtask) -> Subtask:
-            if sub.kind != "documents":
-                return sub
-            count = source.count(
-                self.spark, sub.index, sub.type, sub.min_size, sub.max_size
-            )
-            return Subtask(**{**vars(sub), "count": count})
-
-        # bounded-parallel count probes (subtasks.js:394 ran these at
-        # concurrency 10): map preserves FIFO order, an exception in any
-        # probe propagates and fails the build like the sequential loop
-        counted = list(self._plan_pool_map(_count, pending))
-
         # planning succeeded — now swap in the fresh backlog atomically
         state.data["backlog"] = []
         state.data["progress"] = {}  # stale in-progress from a dead run
         state.data["total"] = sum(state.data["completed"].values())
         seen: set = set()
-        for sub in counted:
+        for sub in pending:
             state.enqueue(sub, save=False, seen=seen)
         state.save()  # persist the rebuild even if nothing got enqueued
         return state
@@ -867,19 +856,22 @@ class Engine:
         def _plan_slice(item: tuple[dict, dict, int]) -> list[Bound]:
             cfg, type_cfg, shards = item
             if flush_override:
-                return [Bound(-1, -1, flush_override)]
+                # no sizes to plan: one unranged subtask, counted once
+                count = source.count(self.spark, cfg["name"], type_cfg["name"])
+                return [Bound(-1, -1, flush_override, count)]
             # sizes-only planning read: the wire store scrolls
             # metadata-only (_source: false) so planning never
             # ships document bodies; parquet prunes to the one
-            # column natively. Planning probes stats +
-            # histograms (several actions); a wire source would
-            # re-scroll the cluster per action, so pin the
-            # one-column sample for the duration of the search
+            # column natively. Under the driver gate the search is
+            # one collected histogram; above it, stats + histograms
+            # (several actions), and a wire source would re-scroll
+            # the cluster per action, so pin the one-column sample
+            # for the duration of the search
             stats_df = source.read_sizes(self.spark, cfg["name"], type_cfg["name"])
             if hasattr(source, "deliver"):
                 stats_df = stats_df.persist()
             try:
-                return plan_bounds(DataFrameSizeStats(stats_df, shards=shards))
+                return plan_bounds(CollectedSizeStats(stats_df, shards=shards))
             finally:
                 if hasattr(source, "deliver"):
                     stats_df.unpersist()
@@ -900,6 +892,7 @@ class Engine:
                         min_size=b.min_size,
                         max_size=b.max_size,
                         flush_size=b.flush_size,
+                        count=b.count,
                     )
                 )
         return out

@@ -67,12 +67,6 @@ def hash60(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def seeded_hash60(col: Column | str, seed: int) -> Column:
-    """hash60 of ``value || '#' || seed`` — one permutation per seed."""
-    c = F.col(col) if isinstance(col, str) else col
-    return hash60(F.concat(c, F.lit(f"#{seed}")))
-
-
 def fingerprint(col: Column | str) -> Column:
     """Document fingerprint: md5 of whitespace-normalised lowercase text.
 

@@ -29,30 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from chillastic_spark.knobs import env_knob
+from chillastic_spark.knobs import local_cap
 from chillastic_spark.persist import materialize, release
-
-# Small-graph fast path (r11): below this many SYMMETRIC edge rows
-# (= 2× undirected edges), the component labels are computed with one
-# driver-side union-find over the already-pinned edge table instead of
-# the distributed fixpoint loop. Near-dup pair graphs are tiny relative
-# to their corpus (sf0.1: 256 jaccard pairs over 5000 docs, 1450
-# embedding pairs over 1536 vectors — and each loop ROUND is ~5 chained
-# shuffles plus a convergence-probe job, ~1.5s of pure per-job overhead
-# for a graph that fits in L2). The gate is a measured row count, not a
-# scale-factor constant: a 100 TB corpus whose pair graph exceeds the
-# cap takes the loop unchanged. 200k rows ≈ a few MB collected — the
-# same order as a broadcast-join build side. 0 disables (tests use it
-# to pin the loop's round budget).
-_LOCAL_CAP_ENV = "CHILLASTIC_CC_LOCAL_CAP"
-_LOCAL_CAP_DEFAULT = 200_000
-
-
-def _local_cap() -> int:
-    """``CHILLASTIC_CC_LOCAL_CAP``, read per call (tests flip it); a
-    value that is not an integer falls back to the default."""
-    return env_knob(_LOCAL_CAP_ENV, _LOCAL_CAP_DEFAULT, int, "an integer")
-
 
 def _local_components(rows) -> "dict | None":
     """Exact min-label components via union-find over collected
@@ -112,8 +90,9 @@ def connected_components(
     # job). Guide §1.2: the cheapest shuffle is the one the algorithm
     # no longer needs. Isolated A/B at sf0.1: 0.77 vs 1.59s on the
     # 256-edge jaccard graph, 0.69 vs 3.33s on the 1450-edge embedding
-    # graph (7 interleaved reps, labels identical).
-    cap = _local_cap()
+    # graph (7 interleaved reps, labels identical). The cap is the
+    # shared driver gate (knobs.local_cap, CHILLASTIC_CC_LOCAL_CAP).
+    cap = local_cap()
     head = sym.limit(cap + 1).collect() if cap > 0 else None
     if head is not None and len(head) <= cap:
         comp = _local_components((r[0], r[1]) for r in head)

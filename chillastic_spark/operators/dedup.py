@@ -19,7 +19,6 @@ Design notes for 100 TB scale
 """
 from __future__ import annotations
 
-import os
 import warnings
 from collections import deque
 
@@ -27,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chillastic_spark import functions as CF
+from chillastic_spark.knobs import env_knob, switch
 
 # Multi-consumer intermediates (shingle sets, minhash signatures) are
 # pinned via the SHARED policy in chillastic_spark.persist —
@@ -269,6 +269,26 @@ class HotGramSkewWarning(UserWarning):
 _HOT_GRAM_WARN_FRAC = 0.2
 
 
+def _fraction(raw: str) -> float:
+    value = float(raw)
+    if not 0 <= value <= 1:  # also rejects nan
+        raise ValueError(raw)
+    return value
+
+
+def _preflight_enabled() -> bool:
+    """``CHILLASTIC_HOT_GRAM_PREFLIGHT`` (1 = on, the default; 0 = off)."""
+    return env_knob("CHILLASTIC_HOT_GRAM_PREFLIGHT", True, switch, "0 or 1")
+
+
+def _hot_gram_warn_frac() -> float:
+    """``CHILLASTIC_HOT_GRAM_WARN_FRAC``, a fraction in [0, 1]."""
+    return env_knob(
+        "CHILLASTIC_HOT_GRAM_WARN_FRAC", _HOT_GRAM_WARN_FRAC, _fraction,
+        "a fraction in [0, 1]",
+    )
+
+
 # Most recent preflight verdicts (bounded ring, newest last) — the
 # operator-visible record of every guard run, hot or benign, surfaced
 # through maintenance.store_health_report / GET /stores/health (r9
@@ -302,12 +322,10 @@ def _hot_gram_preflight(
 
     Disable with CHILLASTIC_HOT_GRAM_PREFLIGHT=0; tune the trigger
     with CHILLASTIC_HOT_GRAM_WARN_FRAC."""
-    if os.environ.get("CHILLASTIC_HOT_GRAM_PREFLIGHT", "1") == "0":
+    if not _preflight_enabled():
         return
     if warn_frac is None:
-        warn_frac = float(
-            os.environ.get("CHILLASTIC_HOT_GRAM_WARN_FRAC", _HOT_GRAM_WARN_FRAC)
-        )
+        warn_frac = _hot_gram_warn_frac()
     nd_src = sizes if sizes is not None else g
     n_docs = nd_src.agg(F.countDistinct("doc_id").alias("nd")).collect()[0]["nd"]
     if not n_docs:
@@ -433,9 +451,7 @@ def _pair_scores(
     apply to one measure and silently diverge in the other.
     ``score_of(common, sz_a, sz_b) -> Column`` supplies the formula."""
     keys = list(keys or [])
-    run_preflight = preflight and os.environ.get(
-        "CHILLASTIC_HOT_GRAM_PREFLIGHT", "1"
-    ) != "0"
+    run_preflight = preflight and _preflight_enabled()
     # the shingle table feeds three consumers (both join sides + sizes);
     # materialise it once instead of re-tokenising per consumer — at
     # cluster scale this is a persist/checkpoint of the inverted index.

@@ -115,10 +115,6 @@ def lang_id(text: Column | str | None = None, w: Column | None = None) -> Column
     )
 
 
-def with_token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("n_tokens", token_count(text_col))
-
-
 def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """One-pass enrichment: tokenise once, derive all features."""
     w = F.col("__w")

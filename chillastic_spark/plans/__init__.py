@@ -10,22 +10,29 @@ boundaries by delta-scaled multipliers until chunk counts converge
 within 100. Golden outputs are pinned in tests/test_bounds.py
 (from tests/services/subtasks.bounds.spec.js:118-231).
 
-Data access is abstracted behind SizeStatsProvider. The DataFrame
-provider needs ONE scan for stats and ONE scan per refinement iteration
-(conditional-count aggregate) — at 100 TB those scans prune to the
-(index,type) partition and read only the size column. A cheaper
-single-pass alternative (approx_quantile) is provided for planners that
-don't need golden-exact boundaries.
+Data access is abstracted behind SizeStatsProvider. The engine plans
+with CollectedSizeStats: one ``groupBy(size).count()`` aggregate,
+collected to the driver once (at most ``knobs.local_cap()`` distinct
+sizes), answers the stats pass and every refinement iteration on the
+driver. Above the cap it falls back to DataFrameSizeStats, ONE scan for
+stats and ONE scan per refinement iteration (conditional-count
+aggregate) — at 100 TB those scans prune to the (index,type) partition
+and read only the size column. The last histogram holds the exact
+count of every range it returns, so each Bound carries its count and
+admission needs no per-subtask count query.
 """
 from __future__ import annotations
 
 import math
+from bisect import bisect_left
 from dataclasses import dataclass
-from typing import Protocol
+from itertools import accumulate
+from typing import Optional, Protocol
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chillastic_spark.knobs import local_cap
 from chillastic_spark.model import Subtask
 
 MB = 1024 * 1024
@@ -40,6 +47,9 @@ class Bound:
     min_size: float
     max_size: float
     flush_size: int
+    # documents in [min_size, max_size) — or in the whole slice for the
+    # unranged (-1, -1) bound — read off the histogram that chose it
+    count: int
 
 
 @dataclass(frozen=True)
@@ -89,6 +99,72 @@ class DataFrameSizeStats:
             int(row["c2"] or 0),
             int(row["c3"] or 0),
         )
+
+
+class _Histogram:
+    """Driver-side answers from collected (size, count) rows."""
+
+    def __init__(self, rows):
+        pairs = sorted((r[0], r[1]) for r in rows)
+        self._sizes = [s for s, _ in pairs]
+        # _below[i]: rows whose size is below the i-th distinct size
+        self._below = list(accumulate((n for _, n in pairs), initial=0))
+
+    def _between(self, lo: float, hi: float) -> int:
+        """Rows with ``lo <= size < hi``."""
+        n = self._below[bisect_left(self._sizes, hi)] - self._below[
+            bisect_left(self._sizes, lo)
+        ]
+        return max(0, n)
+
+    def stats(self) -> tuple[int, float, float]:
+        if not self._sizes:
+            return 0, 0.0, 0.0
+        return self._below[-1], float(self._sizes[0]), float(self._sizes[-1])
+
+    def histogram3(self, b0: float, b1: float, b2: float):
+        return (
+            self._below[-1],
+            self._between(0, b0),
+            self._between(b0, b1),
+            self._between(b1, b2),
+        )
+
+
+class CollectedSizeStats:
+    """The slice's size histogram, collected to the driver once.
+
+    The first ``stats()`` runs ONE aggregate — ``groupBy(size).count()``,
+    at most ``cap + 1`` rows collected — and then it and every
+    ``histogram3()`` are answered on the driver, so a whole bounds
+    search costs one Spark aggregate instead of one per iteration. The
+    collect is lazy so that it runs inside ``plan_bounds``. ``cap`` is
+    the shared driver gate, ``knobs.local_cap()``: more than ``cap``
+    distinct sizes, or ``cap <= 0``, fall back to
+    :class:`DataFrameSizeStats` over the same frame (the extra cost: one
+    aggregate and ``cap + 1`` rows)."""
+
+    def __init__(self, df: DataFrame, size_col: str = "_size", shards: int = 1):
+        self._frame = DataFrameSizeStats(df, size_col, shards)
+        self._answers: "Optional[SizeStatsProvider]" = None
+        self.shards = shards
+
+    def _provider(self) -> SizeStatsProvider:
+        if self._answers is None:
+            cap, rows = local_cap(), None
+            if cap > 0:
+                rows = self._frame._df.groupBy("s").count().limit(cap + 1).collect()
+            if rows is not None and len(rows) <= cap:
+                self._answers = _Histogram(rows)
+            else:
+                self._answers = self._frame
+        return self._answers
+
+    def stats(self) -> tuple[int, float, float]:
+        return self._provider().stats()
+
+    def histogram3(self, b0: float, b1: float, b2: float):
+        return self._provider().histogram3(b0, b1, b2)
 
 
 def flush_size_for(max_size: float, shards: int) -> int:
@@ -150,13 +226,13 @@ def calculate_bounds(
     give up (iteration cap / degenerate), or move b0/b1 by the
     delta-scaled multiplier toward balance and recurse.
     """
-    default = [Bound(-1, -1, Subtask.DEFAULT_FLUSH_SIZE)]
     shards = provider.shards
 
     for i in range(max_iterations + 1):
         total, c1, c2, c3 = provider.histogram3(*bounds)
         if total == 0 or total > c1 + c2 + c3:
-            return default
+            # empty, or rows outside every range: one unranged subtask
+            return [Bound(-1, -1, Subtask.DEFAULT_FLUSH_SIZE, total)]
         edges = [(0.0, bounds[0]), (bounds[0], bounds[1]), (bounds[1], bounds[2])]
         buckets = []
         for count, (lo, hi) in zip((c1, c2, c3), edges):
@@ -168,7 +244,7 @@ def calculate_bounds(
 
         def make_bounds() -> list[Bound]:
             return [
-                Bound(b.min_size, b.max_size, b.flush_size)
+                Bound(b.min_size, b.max_size, b.flush_size, b.count)
                 for b in buckets
                 if b.count > 0
             ]
@@ -178,7 +254,7 @@ def calculate_bounds(
             fs = (
                 Subtask.DEFAULT_FLUSH_SIZE if b1_.max_size == 0 else b1_.flush_size
             )
-            return [Bound(-1, -1, fs)]
+            return [Bound(-1, -1, fs, total)]
         if i >= max_iterations:
             return make_bounds()
 
@@ -216,7 +292,7 @@ def calculate_bounds(
         if bound1 > bound2:
             bound1 = bound2 / 2
         bounds = [bound1, bound2, b3_.max_size]
-    return default  # unreachable
+    raise AssertionError("unreachable: the last iteration returns")
 
 
 def plan_bounds(provider: SizeStatsProvider) -> list[Bound]:
@@ -224,38 +300,6 @@ def plan_bounds(provider: SizeStatsProvider) -> list[Bound]:
     count, lower, upper = provider.stats()
     seed = initial_bounds(count, lower, upper + 1)
     return calculate_bounds(provider, seed)
-
-
-def approx_plan_bounds(
-    df: DataFrame, size_col: str = "_size", shards: int = 1, rel_err: float = 0.01
-) -> list[Bound]:
-    """Single-pass alternative: approx quantiles at 60%/90% replace the
-    whole iterative search (SURVEY §4.1 recommendation). Not golden-
-    exact; preferred at very large scale (ONE Greenwald-Khanna pass —
-    the empty-input guard reads the quantile result instead of paying
-    a second full count() scan)."""
-    # NULL _size → 0, matching DataFrameSizeStats: approxQuantile
-    # IGNORES nulls, and an index of all-unsized docs would return []
-    # and crash the unpack even though rows exist
-    df = df.withColumn(size_col, F.coalesce(F.col(size_col), F.lit(0)))
-    q = df.approxQuantile(size_col, [0.6, 0.9, 1.0], rel_err)
-    if not q:  # empty input: approxQuantile saw no values
-        return [Bound(-1, -1, Subtask.DEFAULT_FLUSH_SIZE)]
-    q60, q90, mx = q
-    upper = mx + 1
-    b1, b2 = q60, min(q90, MB) if upper > MB else q90
-    if b1 > b2:
-        # same inversion guard as initial_bounds: capping b2 at 1 MB
-        # can push it BELOW q60, and edges (0,q60),(b2,upper) would
-        # then double-cover [b2, q60) — overlapping subtasks scan and
-        # transfer those docs twice
-        b1 = math.floor(b2 / 2)
-    edges = [(0.0, b1), (b1, b2), (b2, upper)]
-    return [
-        Bound(lo, hi, flush_size_for(hi, shards))
-        for lo, hi in edges
-        if hi > lo
-    ]
 
 
 def formatted_plan(df) -> str:

@@ -21,6 +21,12 @@ Usage (from the repository root)::
 
     python3 scripts/ab_perfbench.py --pairs 10 --seed 101
     python3 scripts/ab_perfbench.py --parent /path/to/checkout --workloads reindex_incremental
+    python3 scripts/ab_perfbench.py --pairs 10 --seed 101 --trace-seed 7
+
+``--trace-seed N`` then runs one ``--trace 1`` repetition per side and
+workload at seed N and prints, per workload, every per-layer metric of
+``BENCHMARK.json`` whose value differs, parent → change: the layer
+evidence that goes next to the end-to-end verdict.
 
 ``--parent-rev`` exports that revision with ``git archive`` into a
 temporary directory (removed afterwards); it defaults to ``HEAD`` while
@@ -98,12 +104,12 @@ def summarize(pairs: list, better: str, bound: float) -> dict:
 
 
 # ---------------------------------------------------------------- running
-def run_bench(tree: str, workload: str, seed: int) -> dict:
-    """One untraced benchmark run from ``tree``, as long as
-    ``BENCHMARK.json`` says; its last stdout line."""
+def run_bench(tree: str, workload: str, seed: int, trace: int = 0) -> dict:
+    """One benchmark run from ``tree``, as long as ``BENCHMARK.json``
+    says; its last stdout line."""
     proc = subprocess.run(
         [*SPEC["command"], "--workload", workload, "--seed", str(seed),
-         "--seconds", str(SPEC["run_seconds"]), "--trace", "0"],
+         "--seconds", str(SPEC["run_seconds"]), "--trace", str(trace)],
         cwd=tree, capture_output=True, text=True,
     )
     lines = proc.stdout.strip().splitlines()
@@ -112,6 +118,19 @@ def run_bench(tree: str, workload: str, seed: int) -> dict:
             f"{tree}: {workload} seed {seed} exited {proc.returncode}\n{proc.stderr[-2000:]}"
         )
     return json.loads(lines[-1])
+
+
+def layer_diff(parent: dict, change: dict) -> list:
+    """One line per ``BENCHMARK.json`` per-layer metric whose value
+    differs between two traced runs' ``metrics``, parent → change."""
+    lines = []
+    for m in SPEC["per_layer"]:
+        p = parent.get(m["name"], {}).get("value")
+        c = change.get(m["name"], {}).get("value")
+        if p is None or c is None or p == c:
+            continue
+        lines.append(f"  {m['name']:30s} {p:.4g} -> {c:.4g} {m['unit']}")
+    return lines
 
 
 def default_parent_rev(root: str = ROOT) -> str:
@@ -144,6 +163,10 @@ def main(argv=None) -> int:
     ap.add_argument("--seed", type=int, default=1, help="seed of the first pair")
     ap.add_argument("--workloads", help="comma-separated (default: every BENCHMARK.json workload)")
     ap.add_argument("--out", help="write the raw runs and the summary here as JSON")
+    ap.add_argument(
+        "--trace-seed", type=int,
+        help="after the pairs, one --trace 1 run per side at this seed; print the per-layer diff",
+    )
     args = ap.parse_args(argv)
 
     workloads = args.workloads.split(",") if args.workloads else [w["name"] for w in SPEC["workloads"]]
@@ -155,7 +178,7 @@ def main(argv=None) -> int:
         tmp = tempfile.mkdtemp(prefix="ab-parent-")
         export_rev(args.parent_rev or default_parent_rev(), tmp)
         parent = tmp
-    runs = []
+    runs, traces = [], {}
     try:
         for wl in workloads:
             for k in range(args.pairs):
@@ -171,6 +194,12 @@ def main(argv=None) -> int:
                     f" correct={got[n]['correct']} failed={got[n]['failed']}"
                     for n in ("parent", "change")
                 ), file=sys.stderr, flush=True)
+        if args.trace_seed is not None:
+            for wl in workloads:
+                traces[wl] = {
+                    name: run_bench(parent if name == "parent" else ROOT, wl, args.trace_seed, trace=1)
+                    for name in ("parent", "change")
+                }
     finally:
         if tmp:
             shutil.rmtree(tmp, ignore_errors=True)
@@ -201,9 +230,13 @@ def main(argv=None) -> int:
                 f" -> change {c['median']:.4g} [{c['q1']:.4g}, {c['q3']:.4g}]"
                 f"  x{s['ratio']:.3f}  won {s['won']}/{s['pairs']}  {s['verdict']}"
             )
+    for wl, t in traces.items():
+        print(f"{wl} per-layer, --trace 1 seed {args.trace_seed}, parent -> change:")
+        print("\n".join(layer_diff(t["parent"]["metrics"], t["change"]["metrics"]))
+              or "  (no per-layer metric differs)")
     if args.out:
         with open(args.out, "w") as f:
-            json.dump({"runs": runs, "summary": summary}, f, indent=1)
+            json.dump({"runs": runs, "summary": summary, "traces": traces}, f, indent=1)
     return 0
 
 

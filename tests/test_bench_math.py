@@ -5,7 +5,8 @@ fastest-window normalization. These numbers go into BENCH_r{N}.json
 and drive the cross-round performance comparison, so the arithmetic
 is pinned exactly. The same holds for scripts/ab_perfbench.py's
 summary of interleaved parent/change pairs (quartiles, pairs won, the
-gain / bound / unresolved verdict)."""
+gain / bound / unresolved verdict) and its per-layer diff of two traced
+runs."""
 import json
 import statistics
 
@@ -122,6 +123,24 @@ def test_contract_line_demotes_normalized_map_when_over_budget():
     assert diag["stdout_demoted"] == ["queries_normalized"]
     assert len(diag["queries_normalized"]) == 45
     json.loads(line)
+
+
+def test_contract_line_still_over_budget_after_demotion_is_reported(capsys):
+    """When the `queries` map alone outgrows the budget, the line cannot
+    shrink further: the overflow is recorded in the diagnostics and
+    warned on stderr instead of passing silently."""
+    out, diag = bench.split_contract_payload(_fake_full(120))
+    line = json.dumps(out, separators=(",", ":"))
+    assert len(line) > bench.STDOUT_BUDGET
+    assert len(out["queries"]) == 120 and "queries_normalized" not in out
+    assert diag["stdout_demoted"] == ["queries_normalized"]
+    assert diag["stdout_over_budget"] == len(line)
+    err = capsys.readouterr().err
+    assert f"{len(line)} chars" in err and f"{bench.STDOUT_BUDGET}-char budget" in err
+    # inside the budget: no record, no warning
+    _, diag = bench.split_contract_payload(_fake_full(45))
+    assert "stdout_over_budget" not in diag
+    assert capsys.readouterr().err == ""
 
 
 def test_end_to_end_noise_recovery():
@@ -286,3 +305,56 @@ def test_ab_default_parent_rev_is_head_while_the_change_is_uncommitted(tmp_path)
     assert ab.default_parent_rev(str(tmp_path)) == "HEAD~"
     (tmp_path / "new").write_text("")  # untracked
     assert ab.default_parent_rev(str(tmp_path)) == "HEAD"
+
+
+def test_ab_layer_diff_prints_each_per_layer_metric_that_differs():
+    ab = _ab()
+    parent = {"sources.count_calls": {"value": 3.0, "unit": "count"},
+              "spark.jobs": {"value": 19.0, "unit": "count"},
+              "sinks.upsert_calls": {"value": 1.0, "unit": "count"},
+              "plans.plan_bounds_s": {"value": 0.2512, "unit": "s"},
+              "not.a.layer": {"value": 1.0, "unit": "s"}}
+    change = {"sources.count_calls": {"value": 0.0, "unit": "count"},
+              "spark.jobs": {"value": 11.0, "unit": "count"},
+              "sinks.upsert_calls": {"value": 1.0, "unit": "count"},
+              "plans.plan_bounds_s": {"value": 0.09, "unit": "s"},
+              "not.a.layer": {"value": 2.0, "unit": "s"}}
+    # BENCHMARK.json order; equal values and unknown names are left out
+    assert ab.layer_diff(parent, change) == [
+        f"  {'plans.plan_bounds_s':30s} 0.2512 -> 0.09 s",
+        f"  {'sources.count_calls':30s} 3 -> 0 count",
+        f"  {'spark.jobs':30s} 19 -> 11 count",
+    ]
+    assert ab.layer_diff(parent, parent) == []
+
+
+def test_ab_trace_seed_runs_one_traced_run_per_side_after_the_pairs(
+    monkeypatch, tmp_path, capsys
+):
+    ab = _ab()
+    calls = []
+
+    def fake_run(tree, workload, seed, trace=0):
+        side = "parent" if tree == "parent-tree" else "change"
+        calls.append((side, seed, trace))
+        if trace:
+            jobs = 19.0 if side == "parent" else 11.0
+            return {"correct": True, "failed": 0,
+                    "metrics": {"spark.jobs": {"value": jobs, "unit": "count"},
+                                "sinks.upsert_calls": {"value": 1.0, "unit": "count"}}}
+        names = ("wall_s", "admit_s", "drain_s", "docs_per_s", "setup_s")
+        return {"correct": True, "failed": 0,
+                "metrics": {n: {"value": 1.0, "unit": "s"} for n in names}}
+
+    monkeypatch.setattr(ab, "run_bench", fake_run)
+    out = tmp_path / "ab.json"
+    ab.main(["--parent", "parent-tree", "--pairs", "2", "--seed", "3",
+             "--workloads", "w", "--trace-seed", "7", "--out", str(out)])
+    assert calls[-2:] == [("parent", 7, 1), ("change", 7, 1)]
+    assert all(trace == 0 for _, _, trace in calls[:-2])
+    printed = capsys.readouterr().out
+    assert "w per-layer, --trace 1 seed 7, parent -> change:" in printed
+    assert f"  {'spark.jobs':30s} 19 -> 11 count" in printed
+    assert "sinks.upsert_calls" not in printed
+    traces = json.loads(out.read_text())["traces"]["w"]
+    assert traces["change"]["metrics"]["spark.jobs"]["value"] == 11.0

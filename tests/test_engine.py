@@ -895,3 +895,126 @@ def test_canonicalize_keeps_malformed_ids_and_propagates_bugs(tmp_path, monkeypa
     monkeypatch.setattr(Subtask, "from_id", staticmethod(broken))
     with pytest.raises(RuntimeError, match="bug in from_id"):
         TaskState(str(tmp_path), "t1")
+
+
+# ------------------------------------------------ counts ride on the plan
+
+
+def _planning_source(spark, tmp_path):
+    """Two slices of one index: ix/t (sizes 0..290 and 4 NULL) and
+    ix/other (sizes 0..40)."""
+    src = _parity_source(spark, tmp_path)
+    src.put_indices([{
+        "name": "ix", "settings": {"index": {"number_of_shards": 1}},
+        "mappings": {"t": {"properties": {}}, "other": {"properties": {}}},
+        "aliases": {},
+    }])
+    return src
+
+
+def _per_query_backlog(spark, src, index):
+    """The backlog as the per-iteration aggregates planned it and one
+    count query per subtask counted it: [subtask id, count] in FIFO
+    order."""
+    from chillastic_spark.plans import DataFrameSizeStats, plan_bounds
+
+    out = []
+    for cfg in src.get_indices(index):
+        for t in src.types_of(cfg):
+            sizes = src.read_sizes(spark, cfg["name"], t["name"])
+            for b in plan_bounds(DataFrameSizeStats(sizes)):
+                sub = Subtask(
+                    kind="documents", index=cfg["name"], type=t["name"],
+                    min_size=b.min_size, max_size=b.max_size, flush_size=b.flush_size,
+                )
+                count = src.count(spark, sub.index, sub.type, sub.min_size, sub.max_size)
+                out.append([sub.subtask_id(), count])
+    return out
+
+
+def test_planned_counts_equal_store_counts_fresh_and_after_resume(
+    spark, tmp_path, monkeypatch
+):
+    """Every planned subtask's count is DocumentStore.count over its
+    range, and the backlog (ids, counts, order) is the one the
+    per-iteration aggregates plus one count per subtask built — fresh,
+    after a resume rebuild, and with the driver gate off."""
+    src = _planning_source(spark, tmp_path)
+    dst = DocumentStore(str(tmp_path / "dst"))
+    want = _per_query_backlog(spark, src, "ix")
+    assert len(want) >= 4 and sum(n for _, n in want) == 39
+    eng = _engine(spark, tmp_path)
+    state = eng.add_task("t1", _task(src, dst, transfer={"from_indices": "ix"}))
+    assert state.data["backlog"] == want
+    assert state.data["total"] == 39
+
+    # deliver the first slice group, then rebuild: the completed
+    # members are subtracted, the rest keep their planned counts
+    eng.run_task("t1", max_subtasks=1)
+    state = eng.build_backlog("t1")
+    done = state.data["completed"]
+    assert done and state.data["backlog"] == [e for e in want if e[0] not in done]
+    assert state.data["total"] == 39
+
+    monkeypatch.setenv("CHILLASTIC_CC_LOCAL_CAP", "0")
+    state = eng.add_task("t2", _task(src, dst, transfer={"from_indices": "ix"}))
+    assert state.data["backlog"] == want
+
+
+def test_admission_plans_each_slice_in_one_aggregate(spark, tmp_path, monkeypatch):
+    """Under the driver gate, admitting a task runs at most two Spark
+    jobs (one aggregate) per (index, type) slice and no count query."""
+    import uuid
+
+    src = _planning_source(spark, tmp_path)
+    dst = DocumentStore(str(tmp_path / "dst"))
+    counts = []
+    real_count = DocumentStore.count
+
+    def count(self, *a, **kw):
+        counts.append(a[1:])
+        return real_count(self, *a, **kw)
+
+    monkeypatch.setattr(DocumentStore, "count", count)
+    # sequential planning: the job group below is a thread-local property
+    eng = Engine(spark, str(tmp_path / "state"), plan_concurrency=1)
+    sc = spark.sparkContext
+    group = f"admit-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "add_task")
+    try:
+        eng.add_task("t1", _task(src, dst, transfer={"from_indices": "ix"}))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 2 <= jobs <= 4, jobs
+    assert counts == []
+
+
+def test_flush_size_override_counts_each_slice_once(spark, tmp_path, monkeypatch):
+    """A flush_size override plans no sizes: one unranged subtask and one
+    count query per slice."""
+    src = _planning_source(spark, tmp_path)
+    dst = DocumentStore(str(tmp_path / "dst"))
+    counts, sized = [], []
+    real_count, real_sizes = DocumentStore.count, DocumentStore.read_sizes
+
+    def count(self, *a, **kw):
+        counts.append(a[1:])
+        return real_count(self, *a, **kw)
+
+    def read_sizes(self, *a, **kw):
+        sized.append(a[1:])
+        return real_sizes(self, *a, **kw)
+
+    monkeypatch.setattr(DocumentStore, "count", count)
+    monkeypatch.setattr(DocumentStore, "read_sizes", read_sizes)
+    eng = _engine(spark, tmp_path)
+    state = eng.add_task(
+        "t1", _task(src, dst, transfer={"from_indices": "ix", "flush_size": 7})
+    )
+    got = [(Subtask.from_id(sid, n), n) for sid, n in state.data["backlog"]]
+    assert [(s.type, s.min_size, s.max_size, s.flush_size, n) for s, n in got] == [
+        ("other", -1, -1, 7, 5), ("t", -1, -1, 7, 34),
+    ]
+    assert sorted(counts) == [("ix", "other"), ("ix", "t")]
+    assert sized == []

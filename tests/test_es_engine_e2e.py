@@ -266,6 +266,56 @@ def test_es_source_slice_group_scrolls_each_member_at_its_flush_size(
     assert grouped_rows == single_rows and len(grouped_rows) == 30
 
 
+def test_es_source_admission_sends_no_count_search_but_one_per_slice_under_flush_size(
+    spark, tmp_path, clusters
+):
+    """Admitting an ES-source task reads the counts off the planned size
+    histogram: no ``size=0`` count search, and every subtask's count
+    and the task total equal ESStore.count over the same ranges. A
+    flush_size override plans no sizes and sends one count search per
+    (index, type) slice."""
+    from urllib.parse import parse_qs, urlsplit
+
+    from chillastic_spark.engine import TaskState
+    from chillastic_spark.model import Subtask
+    from chillastic_spark.sources import DocumentStore
+    from chillastic_spark.sources.es_rest import ESStore
+
+    src, src_url, _dst, _ = clusters
+    src.seed("ix", "t1", {f"d{i}": {"v": i, "__size": 10 * (i + 1)} for i in range(30)})
+    src.seed("ix", "t2", {f"e{i}": {"v": i, "__size": 7 + i} for i in range(6)})
+    eng = Engine(spark, str(tmp_path / "state"))
+
+    def admit(task_id, **transfer):
+        src.request_log.clear()
+        eng.add_task(task_id, Task(
+            source=src_url, destination=DocumentStore(str(tmp_path / task_id)).root,
+            transfer=TransferSpec(from_indices="ix", **transfer),
+        ))
+        count_searches = [
+            r["path"] for r in src.requests_of("search")
+            if parse_qs(urlsplit(r["path"]).query).get("size") == ["0"]
+        ]
+        data = TaskState(eng.state_root, task_id).data
+        backlog = [(Subtask.from_id(sid, n), n) for sid, n in data["backlog"]]
+        return count_searches, backlog, data["total"]
+
+    count_searches, backlog, total = admit("planned")
+    assert count_searches == []
+    assert len(backlog) >= 4 and {s.type for s, _ in backlog} == {"t1", "t2"}
+    store = ESStore(src_url)
+    for sub, n in backlog:
+        assert n == store.count(spark, sub.index, sub.type, sub.min_size, sub.max_size)
+    assert total == store.count(spark, "ix", "t1") + store.count(spark, "ix", "t2") == 36
+
+    count_searches, backlog, total = admit("override", flush_size=5)
+    assert sorted(count_searches) == ["/ix/t1/_search?size=0", "/ix/t2/_search?size=0"]
+    assert [(s.type, s.min_size, s.flush_size, n) for s, n in backlog] == [
+        ("t1", -1, 5, 30), ("t2", -1, 5, 6),
+    ]
+    assert total == 36
+
+
 TYPELESS_DATA = """
 TYPE = "data"
 def predicate(doc, args):

@@ -558,15 +558,64 @@ def test_connected_components_malformed_local_cap_falls_back(
     and takes the default cap instead of raising ValueError inside
     every connected-components consumer."""
     import chillastic_spark.operators.components as C
+    from chillastic_spark import knobs
 
     monkeypatch.setenv("CHILLASTIC_CC_LOCAL_CAP", value)
-    assert C._local_cap() == C._LOCAL_CAP_DEFAULT
+    assert knobs.local_cap() == knobs.LOCAL_CAP_DEFAULT
     err = capsys.readouterr().err
     assert "CHILLASTIC_CC_LOCAL_CAP" in err and repr(value) in err
     edges = spark.createDataFrame([(1, 2), (3, 2), (7, 8)], "id_a long, id_b long")
     got = {(r["node"], r["component"]) for r in C.connected_components(edges).collect()}
     assert got == {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
     assert "CHILLASTIC_CC_LOCAL_CAP" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize(
+    "name,value",
+    [
+        ("CHILLASTIC_HOT_GRAM_WARN_FRAC", "lots"),
+        ("CHILLASTIC_HOT_GRAM_WARN_FRAC", "nan"),
+        ("CHILLASTIC_HOT_GRAM_WARN_FRAC", "-0.1"),
+        ("CHILLASTIC_HOT_GRAM_WARN_FRAC", "1.5"),
+        ("CHILLASTIC_HOT_GRAM_PREFLIGHT", "yes"),
+        ("CHILLASTIC_HOT_GRAM_PREFLIGHT", ""),
+    ],
+)
+def test_malformed_hot_gram_knob_falls_back_with_a_warning(monkeypatch, capsys, name, value):
+    """A malformed hot-gram knob warns on stderr and takes its default
+    (warn at 0.2, preflight on) instead of raising inside dedup."""
+    import chillastic_spark.operators.dedup as D
+
+    monkeypatch.setenv(name, value)
+    assert D._hot_gram_warn_frac() == 0.2
+    assert D._preflight_enabled() is True
+    err = capsys.readouterr().err
+    assert name in err and repr(value) in err
+
+
+def test_valid_hot_gram_knobs_are_used_silently(monkeypatch, capsys):
+    import chillastic_spark.operators.dedup as D
+
+    monkeypatch.setenv("CHILLASTIC_HOT_GRAM_WARN_FRAC", "0.05")
+    monkeypatch.setenv("CHILLASTIC_HOT_GRAM_PREFLIGHT", "0")
+    assert D._hot_gram_warn_frac() == 0.05
+    assert D._preflight_enabled() is False
+    monkeypatch.setenv("CHILLASTIC_HOT_GRAM_PREFLIGHT", "1")
+    assert D._preflight_enabled() is True
+    assert "CHILLASTIC_HOT_GRAM" not in capsys.readouterr().err
+
+
+def test_dedup_runs_its_preflight_under_a_malformed_warn_frac(spark, monkeypatch, capsys):
+    import chillastic_spark.operators.dedup as D
+
+    monkeypatch.setenv("CHILLASTIC_HOT_GRAM_WARN_FRAC", "twenty percent")
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, "x y z w v")], "doc_id long, text string"
+    )
+    pairs = {(r.id_a, r.id_b) for r in D.ngram_jaccard_pairs(docs, n=2).collect()}
+    assert pairs == {(1, 2)}
+    assert D.PREFLIGHT_VERDICTS[-1]["warn_frac"] == 0.2
+    assert "CHILLASTIC_HOT_GRAM_WARN_FRAC" in capsys.readouterr().err
 
 
 def test_substring_dup_stats_planted_span(spark):

@@ -182,19 +182,20 @@ def test_backlog_planning_runs_probes_at_bounded_concurrency(
 
     active = {"now": 0, "max": 0}
     gauge = threading.Lock()
-    real_count = DocumentStore.count
+    real_sizes = DocumentStore.read_sizes
 
-    def tracked_count(self, *a, **kw):
+    # the per-slice planning probe: read the sizes (then one aggregate)
+    def tracked_sizes(self, *a, **kw):
         with gauge:
             active["now"] += 1
             active["max"] = max(active["max"], active["now"])
         time.sleep(0.05)  # widen the overlap window on tiny test data
         try:
-            return real_count(self, *a, **kw)
+            return real_sizes(self, *a, **kw)
         finally:
             with gauge:
                 active["now"] -= 1
-    monkeypatch.setattr(DocumentStore, "count", tracked_count)
+    monkeypatch.setattr(DocumentStore, "read_sizes", tracked_sizes)
 
     eng = Engine(spark, str(tmp_path / "state"), plan_concurrency=10)
     state = eng.add_task("t1", _task(src, dst, from_indices="idx*"))
@@ -262,18 +263,18 @@ def test_planning_pool_fails_fast_and_cleans_up(
     dst = store_factory("dst")
     started = []
     gauge = threading.Lock()
-    real_count = DocumentStore.count
+    real_sizes = DocumentStore.read_sizes
 
-    def flaky_count(self, spark_, index, *a, **kw):
+    def flaky_sizes(self, spark_, index, *a, **kw):
         with gauge:
             started.append(index)
         if index == "idx00":
             time.sleep(0.05)
             raise RuntimeError("transient source failure")
         time.sleep(0.3)
-        return real_count(self, spark_, index, *a, **kw)
+        return real_sizes(self, spark_, index, *a, **kw)
 
-    monkeypatch.setattr(DocumentStore, "count", flaky_count)
+    monkeypatch.setattr(DocumentStore, "read_sizes", flaky_sizes)
     eng = Engine(spark, str(tmp_path / "state"), plan_concurrency=4)
     with pytest.raises(RuntimeError, match="transient source failure"):
         eng.add_task("t1", _task(src, dst, from_indices="idx*"))
